@@ -1,4 +1,4 @@
-.PHONY: test verify verify-full bench plans
+.PHONY: test verify verify-full bench plans perf-serve perf-batch
 
 test:
 	python -m pytest tests/ -x -q
@@ -14,3 +14,10 @@ bench:
 
 plans:
 	python tools/plan_audit.py
+
+# one run of a BENCHMARK.json workload, as the benchmark runs it
+perf-serve:
+	SPARK_GRAFT_CPUS=$$(nproc) python3 perfbench/run.py --workload serve_mixed --seed 1 --seconds 15 --trace 0
+
+perf-batch:
+	SPARK_GRAFT_CPUS=$$(nproc) python3 perfbench/run.py --workload batch_pipeline --seed 1 --seconds 15 --trace 0

@@ -17,6 +17,26 @@ Serving contract notes:
   results are key-bounded (an account's transactions, a branch's day), the
   same contract as ``kv.range_materialize``. The analytical path stays
   DataFrame-shaped via the underlying operators.
+- A table-backed gateway answers reads from an in-memory Arrow copy of the
+  CURRENT snapshot — the reference's memstore, bootstrapped from the log
+  and kept current (``KVStoreLocal`` boot/tail). The copy is loaded with
+  one ``KeyedTable.read().toArrow()`` the first time a version is served
+  and memoized by its version dir (snapshot dirs are immutable); only the
+  latest version is kept. Key equality and the time range are then
+  ``pyarrow.compute`` masks with the Spark predicates' semantics (NULLs
+  never match, ``NaN`` matches ``NaN``), and rows convert the way
+  ``collect()`` returns them.
+- Reads go back to the Spark plan (``kv.point_get``/``kv.prefix_scan``,
+  one job per request) when the snapshot's parquet files total more than
+  ``SNAPSHOT_MAX_BYTES`` (16 MiB), when loading the version failed (e.g.
+  over ``spark.driver.maxResultSize``; not retried until the next
+  commit), or when a filter value would need Spark's type coercion to
+  compare with its column (e.g. a string against a timestamp). A
+  df-backed gateway always runs the Spark plan.
+- Read-your-writes: the version pointer is read on every request, so a
+  read sent after a write's commit returned (a gateway POST's 200, or an
+  external writer's ``upsert``/``changelog_sink`` commit) sees it; reads
+  concurrent with a commit see the old or the new snapshot, never a mix.
 - ``subscribe`` is a generator over a changelog STREAM filtered to one key
   — the ws-client's key subscription (initial state, then every update in
   arrival order). The filter is pushed into the stream before the sink, so
@@ -26,17 +46,116 @@ Serving contract notes:
 
 from __future__ import annotations
 
+import math
 import threading
 import time
 from collections import deque
+from decimal import Decimal
+from functools import reduce
 from typing import Iterator, Mapping
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from affinity_spark.functions.lits import local_df
 from affinity_spark.operators.kv import point_get, prefix_scan
-from affinity_spark.timerange import TimeRange
+from affinity_spark.timerange import UNBOUNDED_END, UNBOUNDED_START, TimeRange
+
+#: snapshots whose parquet files total more than this are not held in
+#: memory: their reads run the Spark plan. Set from a probe of the bank
+#: table's shape (four long columns; the Arrow copy is ~2.3x its parquet
+#: bytes) on a 4-vCPU VM: at 16 MiB the load makes the first read after a
+#: commit (and any read waiting on it) ~1.6x a Spark-plan read, warm reads
+#: take ~2 ms and the driver's peak RSS grows ~120 MB; at 64 MiB the load
+#: is ~3.3x a Spark-plan read and warm reads take 16-24 ms. Tables that
+#: compress better hold more bytes in memory per parquet byte.
+SNAPSHOT_MAX_BYTES = 16 << 20
+
+
+def _arrow_scalar(value, typ: pa.DataType) -> pa.Scalar | None:
+    """``value`` as a scalar of the column's Arrow type, or None where
+    Spark would coerce the comparison (a string against a number, a float
+    against an integer column, a lossy rescale): those reads run the
+    Spark plan so they keep its answer."""
+    if isinstance(value, bool):
+        ok = pa.types.is_boolean(typ)
+    elif isinstance(value, int):
+        ok = pa.types.is_integer(typ)
+    elif isinstance(value, float):
+        ok = pa.types.is_float64(typ)
+    elif isinstance(value, str):
+        ok = pa.types.is_string(typ) or pa.types.is_large_string(typ)
+    elif isinstance(value, Decimal):
+        ok = pa.types.is_decimal(typ)
+    else:
+        ok = False
+    if not ok:
+        return None
+    try:
+        return pa.scalar(value, type=typ)
+    except (pa.ArrowException, OverflowError):
+        return None
+
+
+def _time_conds(col: pa.ChunkedArray, tr: TimeRange, unit: str) -> list | None:
+    """``TimeRange.predicate`` over an Arrow column, or None when the
+    column type is not the one the unit expects."""
+    if unit == "millis" and pa.types.is_integer(col.type):
+        lo, hi = tr.start_ms, tr.end_ms  # both bounds always apply
+    elif (
+        unit == "timestamp"
+        and pa.types.is_timestamp(col.type)
+        and col.type.unit == "us"
+        and col.type.tz is not None
+    ):
+        col = col.cast(pa.int64())  # epoch micros, what Spark compares
+        lo = tr.start_ms * 1000 if tr.start_ms > UNBOUNDED_START else None
+        hi = tr.end_ms * 1000 if tr.end_ms < UNBOUNDED_END else None
+    else:
+        return None
+    try:
+        conds = []
+        if lo is not None:
+            conds.append(pc.greater_equal(col, pa.scalar(lo, pa.int64())))
+        if hi is not None:
+            conds.append(pc.less(col, pa.scalar(hi, pa.int64())))
+        return conds
+    except (pa.ArrowException, OverflowError):
+        return None
+
+
+def _snapshot_mask(
+    table: pa.Table,
+    key: Mapping[str, object],
+    time_range: TimeRange | None,
+    ts_col: str | None,
+    ts_unit: str,
+) -> list | None:
+    """The conjuncts of ``kv.prefix_scan``'s predicate as Arrow masks, or
+    None when the read must run the Spark plan to keep Spark's answer."""
+    conds = []
+    for c, v in key.items():
+        if c not in table.column_names:
+            return None  # Spark resolves names case-insensitively
+        col = table[c]
+        if isinstance(v, float) and math.isnan(v) and pa.types.is_float64(col.type):
+            conds.append(pc.is_nan(col))  # Spark: NaN = NaN is true
+            continue
+        s = _arrow_scalar(v, col.type)
+        if s is None:
+            return None
+        conds.append(pc.equal(col, s))
+    if time_range is not None:
+        if ts_col is None or ts_col not in table.column_names:
+            return None
+        tc = _time_conds(table[ts_col], time_range, ts_unit)
+        if tc is None:
+            return None
+        conds += tc
+    return conds
 
 
 class Subscription:
@@ -207,15 +326,87 @@ class ServingGateway:
         # gateway defines the physical schema, so it must come from a
         # declaration, not from reading the (absent) snapshot
         self._schema = schema
+        # (version dir, (arrow table, schema, binary as bytes) | None) of
+        # the latest snapshot served; None = not held in memory (oversize,
+        # a failed load, or no committed version): reads run Spark plans
+        self._snap = None
+        self._snap_lock = threading.Lock()
 
     def _frame(self) -> DataFrame:
         return self._df if self._table is None else self._table.read()
+
+    def _snapshot(self) -> tuple | None:
+        """The current version's rows in memory with their Spark schema
+        and binary form, or None when reads run the Spark plan. The
+        pointer is read on every call; a new version is loaded once, under
+        the lock, by the first request that sees it."""
+        if self._table is None:
+            return None
+        tbl = self._table
+        snap = self._snap
+        if snap is not None and snap[0] == tbl._current_version_dir():
+            return snap[1]
+        with self._snap_lock:
+            snap = self._snap
+            if snap is None or snap[0] != tbl._current_version_dir():
+                snap = self._snap = self._load_snapshot()
+            return snap[1]
+
+    def _load_snapshot(self) -> tuple[str | None, tuple | None]:
+        """(version dir, its rows) for the current version; the rows are
+        None when the version is not held in memory. Retried when a commit
+        lands mid-load, so the rows always belong to the dir they are keyed
+        by."""
+        tbl = self._table
+        # binary cells as collect() returns them under this conf
+        as_bytes = tbl.spark.conf.get(
+            "spark.sql.execution.pyspark.binaryAsBytes", "true"
+        ).lower() == "true"
+        while True:
+            vdir = tbl._current_version_dir()
+            data = None
+            try:
+                if (
+                    vdir is not None
+                    and tbl.file_stats()["total_bytes"] <= SNAPSHOT_MAX_BYTES
+                ):
+                    df = tbl.read()
+                    data = (df.toArrow().combine_chunks(), df.schema, as_bytes)
+            except Exception:
+                # files reclaimed by a later commit: the loop loads that
+                # one. Any other failure (e.g. over spark.driver.
+                # maxResultSize) is not retried for this version: its reads
+                # run the Spark plan until the next commit
+                data = None
+            if tbl._current_version_dir() == vdir:
+                return vdir, data
+
+    def _snapshot_rows(
+        self, key: Mapping[str, object], time_range: TimeRange | None = None
+    ) -> list[Row] | None:
+        """The rows of the in-memory snapshot matching the key (and time
+        range), as ``collect()`` returns them; None = run the Spark plan."""
+        snap = self._snapshot()
+        if snap is None:
+            return None
+        table, schema, as_bytes = snap
+        conds = _snapshot_mask(table, key, time_range, self._ts_col, self._ts_unit)
+        if conds is None:
+            return None
+        if conds:
+            table = table.filter(reduce(pc.and_, conds))
+        return ArrowTableToRowsConversion.convert(
+            table, schema, binary_as_bytes=as_bytes
+        )
 
     # -- request handlers (what an HTTP route would call) -------------------
 
     def point_get(self, key: Mapping[str, object]) -> list[dict]:
         """GET /{table}/{full key}: the rows for exactly one key."""
-        return [r.asDict() for r in point_get(self._frame(), key).collect()]
+        rows = self._snapshot_rows(key)
+        if rows is None:
+            rows = point_get(self._frame(), key).collect()
+        return [r.asDict() for r in rows]
 
     def prefix_range(
         self,
@@ -225,10 +416,12 @@ class ServingGateway:
         """GET /{table}/{key prefix}[?from=..&until=..]: all rows under a
         key prefix, optionally time-bounded (the branch reads of
         ExampleBankSpec)."""
-        rows = prefix_scan(
-            self._frame(), prefix, time_range, self._ts_col, self._ts_unit
-        )
-        return [r.asDict() for r in rows.collect()]
+        rows = self._snapshot_rows(prefix, time_range)
+        if rows is None:
+            rows = prefix_scan(
+                self._frame(), prefix, time_range, self._ts_col, self._ts_unit
+            ).collect()
+        return [r.asDict() for r in rows]
 
     # -- write handlers (what an HTTP POST/DELETE route calls) --------------
     # The reference's gateway mutates state over POST (``examples/

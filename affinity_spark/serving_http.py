@@ -41,11 +41,17 @@ to the table's own column types from its Spark schema; unknown tables /
 unknown key columns / malformed values answer 404 / 400 like the
 reference's route rejections.
 
-Driver-side by design: serving reads are key-bounded collects (the
-``kv.range_materialize`` contract) — the gateway is the thin edge in
-front of them, exactly the reference's gateway-over-partition-masters
-role. At scale the same handlers sit in front of ``read_pruned``
-(manifest file-skipping) so a point get opens only matching files.
+Driver-side by design: serving reads are key-bounded (the
+``kv.range_materialize`` contract) and the gateway is the thin edge in
+front of them, the reference's gateway-over-partition-masters role. A
+table-backed route answers ``/kv`` and ``/scan`` from the in-memory Arrow
+copy of the table's current snapshot that ``ServingGateway`` memoizes per
+version (the reference's memstore), with no Spark job per request. Reads
+of a snapshot whose parquet files exceed ``serving.SNAPSHOT_MAX_BYTES``
+or whose load failed, and filter values that need Spark's type coercion,
+run the Spark plan instead. The version pointer is checked on every request, so a read sent
+after a write's 200 (or after an external writer's commit) sees it. A read
+of a table with no committed version answers 404.
 """
 
 from __future__ import annotations
@@ -444,10 +450,10 @@ class HttpGateway:
                 key = self._key_of(route, params)
                 if key is None:
                     return
-                if op == "kv":
-                    return self._send(200, route.gateway.point_get(key))
+                if op == "subscribe":
+                    return self._subscribe(route, key)
+                tr = None
                 if op == "scan":
-                    tr = None
                     # int() inside the 400 guard: a malformed from=abc must
                     # answer 400 like any other bad parameter, not drop the
                     # connection with an unhandled ValueError (r12 ADVICE)
@@ -459,8 +465,15 @@ class HttpGateway:
                             )
                     except ValueError as e:
                         return self._send(400, {"error": str(e)})
-                    return self._send(200, route.gateway.prefix_range(key, tr))
-                return self._subscribe(route, key)
+                try:
+                    rows = (
+                        route.gateway.point_get(key)
+                        if op == "kv"
+                        else route.gateway.prefix_range(key, tr)
+                    )
+                except FileNotFoundError as e:  # no committed version yet
+                    return self._send(404, {"error": str(e)})
+                return self._send(200, rows)
 
             def _subscribe(self, route, key):
                 """Push channel: WS (text/JSON or binary/Avro by negotiated

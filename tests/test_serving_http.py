@@ -750,6 +750,31 @@ def test_write_error_mapping_and_concurrent_posts(spark, tmp_path):
         hg.stop()
 
 
+def test_reads_of_unbuilt_table_answer_404(spark, tmp_path):
+    """GET /kv and /scan on a table-backed route with no committed version
+    answer 404 (the write path's mapping), metered as failures, instead
+    of dropping the connection."""
+    from affinity_spark.sources.keyed_table import KeyedTable
+
+    tbl = KeyedTable(
+        spark, str(tmp_path / "t"), ["sortcode", "account", "txn"], "ts"
+    )
+    hg = HttpGateway()
+    hg.register("bank", ServingGateway(table=tbl, schema=SCHEMA), SCHEMA)
+    port = hg.start()
+    try:
+        for path in ("/kv/bank?sortcode=x&account=1&txn=1",
+                     "/scan/bank?sortcode=x&from=0&until=5"):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _get(port, path)
+            assert e.value.code == 404, path
+        _, snap = _get(port, "/metrics")
+        assert snap["GET /kv/bank"]["failure"] == 1
+        assert snap["GET /scan/bank"]["failure"] == 1
+    finally:
+        hg.stop()
+
+
 def test_avro_websocket_client_writes_keyspace(spark, tmp_path):
     """The other half of WebSocketSupportSpec's 'forward ... objects to
     and from the keyspace': a client-sent BINARY enveloped record on the

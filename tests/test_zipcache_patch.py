@@ -29,6 +29,8 @@ from affinity_spark import zipcache_patch
 def patched():
     if sys.version_info >= (3, 12):
         pytest.skip("upstream zipimport already stat-checks on 3.12+")
+    if os.environ.get("AFFINITY_NO_ZIPCACHE_PATCH"):
+        pytest.skip("AFFINITY_NO_ZIPCACHE_PATCH disables the patch")
     assert zipcache_patch.apply()
     yield
 
