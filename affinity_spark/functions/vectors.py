@@ -1,13 +1,17 @@
-"""Vector math over array<float|double> columns — JVM-side built-ins only.
+"""Vector math over array<float|double> columns — JVM-side built-ins only
+(``F.zip_with`` + ``F.aggregate``: no Python, no UDF, no Arrow transfer).
 
-``F.zip_with`` + ``F.aggregate`` keep dot products inside codegen; no Python,
-no UDF serialization. For very wide vectors (>1k dims) a numpy pandas UDF can
-win on SIMD — ``affinity_spark.operators.similarity`` offers that variant —
-but at 64-768 dims the built-in expression path benchmarks faster end-to-end
-because it avoids Arrow transfer entirely.
+The one home of the staged-cosine rule every similarity operator follows:
+each norm ONCE per row or query (:func:`l2_norm0`, or :func:`py_l2_norm`
+driver-side for a literal query), the dot ONCE per pair, combined by
+:func:`cosine_of`. The folds stay higher-order functions on purpose: a
+flat fixed-dimension unrolling measured 3.5× slower (OPTIMIZATION_r15 §1).
 """
 
 from __future__ import annotations
+
+import math
+from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,6 +32,57 @@ def l2_norm(a: Column) -> Column:
         F.aggregate(
             a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
         )
+    )
+
+
+def l2_norm0(a: Column) -> Column:
+    """L2 norm coalesced to 0.0 — the staged-norm column.
+
+    NULL input yields 0.0, so :func:`cosine_of`'s guard maps it to the
+    same NULL cosine as a zero vector. The output is NON-NULLABLE on
+    purpose: a nullable norm lets InferFiltersFromConstraints derive an
+    ``isnotnull(norm)`` predicate that pushdown substitutes into the scan
+    filter as a second copy of the whole fold."""
+    return F.coalesce(l2_norm(a), F.lit(0.0))
+
+
+def py_l2_norm(vec: Sequence[float]) -> float:
+    """Driver-side L2 norm of a literal query vector, bit-identical to
+    :func:`l2_norm0`: python floats ARE IEEE doubles, the sum is the same
+    left-associated 0.0-seeded chain, and sqrt is correctly rounded in
+    both runtimes."""
+    acc = 0.0
+    for x in vec:
+        acc = acc + float(x) * float(x)
+    return math.sqrt(acc)
+
+
+def cosine_of(
+    dot_col: Column | str, norm_a: Column | str, norm_b: Column | str
+) -> Column:
+    """Cosine from a staged dot and staged norms (Columns or names); NULL
+    when the norm product is 0 — under ANSI mode a plain ``x / 0.0``
+    raises, and one degenerate vector must not kill a job. NULL
+    similarities sort last and drop out of thresholds."""
+    dot_col, norm_a, norm_b = (
+        F.col(c) if isinstance(c, str) else c for c in (dot_col, norm_a, norm_b)
+    )
+    denom = norm_a * norm_b
+    return F.when(denom != 0, dot_col / denom)
+
+
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """One-call cosine (norms computed in place, not staged); NULL for a
+    NULL or zero-norm input."""
+    return cosine_of(dot(a, b), l2_norm0(a), l2_norm0(b))
+
+
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance of two array<double> columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
 
 
@@ -175,109 +230,3 @@ def dot_int(a: Column, b: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL for zero-norm inputs.
-
-    The zero guard matters under Spark 4's default ANSI mode, where a plain
-    ``x / 0.0`` raises DIVIDE_BY_ZERO — one degenerate vector must not kill
-    a 100 TB job. NULL similarities sort last / drop out of thresholds.
-    """
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0, dot(a, b) / denom)
-
-# ---------------------------------------------------------------------------
-# Fixed-dimension flat forms (whole-stage codegen).
-#
-# The zip_with/aggregate forms above are higher-order functions — Spark
-# plans them as CodegenFallback (interpreted eval), so a pairwise join
-# that scores cosine per candidate runs an interpreted 64-step fold per
-# PAIR (the r14 kmeans finding, guide §4.1: prefer built-ins/codegen).
-# When the dimension is a build-time constant — the embeddings corpus
-# contract, same as sign_bit_words/srp_project's fixed widths — the dot
-# and norm unroll into ONE flat left-associated sum of element_at terms
-# that whole-stage codegen compiles to straight-line arithmetic.
-#
-# Bit-identity with the fold forms: both evaluate CAST(x AS DOUBLE) *
-# CAST(y AS DOUBLE) terms in index order with left-associated IEEE
-# additions (the fold's 0.0 seed only matters for an all--0.0 input,
-# where the sign of a zero result flips — every consumer compares or
-# floors the value, and Spark SQL orders/compares -0.0 == 0.0, so the
-# distinction is unobservable; pinned by tests/test_vectors_fixed.py).
-# NULL parity: a NULL array yields NULL (branch 1), matching the fold
-# forms' NULL propagation. A dimension MISMATCH raises loudly instead of
-# the fold's silent NULL — the repo's established drifted-corpus guard
-# (sign_bit_words, srp_project).
-#
-# The expression is built as ONE SQL string parsed in a single py4j call
-# (the functions/lits.py lesson: per-term Column arithmetic costs one
-# driver round trip per operation — ~0.2 s per 64-dim expression), so
-# the inputs are column NAMES, not Column objects.
-# ---------------------------------------------------------------------------
-
-
-def _dot_terms(a: str, b: str, dim: int) -> str:
-    return " + ".join(
-        f"(CAST(element_at({a}, {i}) AS DOUBLE) * "
-        f"CAST(element_at({b}, {i}) AS DOUBLE))"
-        for i in range(1, dim + 1)
-    )
-
-
-def _sq_terms(a: str, dim: int) -> str:
-    return " + ".join(
-        f"(CAST(element_at({a}, {i}) AS DOUBLE) * "
-        f"CAST(element_at({a}, {i}) AS DOUBLE))"
-        for i in range(1, dim + 1)
-    )
-
-
-def _guarded(expr: str, dim: int, fn: str, *cols: str) -> Column:
-    nulls = " OR ".join(f"{c} IS NULL" for c in cols)
-    sizes = " AND ".join(f"size({c}) = {dim}" for c in cols)
-    return F.expr(
-        f"CASE WHEN {nulls} THEN CAST(NULL AS DOUBLE) "
-        f"WHEN {sizes} THEN ({expr}) "
-        f"ELSE CAST(raise_error('{fn}: input dim != {dim}') AS DOUBLE) END"
-    )
-
-
-def dot_fixed(a: str, b: str, dim: int) -> Column:
-    """Codegen'd dot product of two fixed-``dim`` array columns (by NAME).
-    Bit-identical to :func:`dot` on well-formed input; loud on drifted
-    dims; NULL on NULL input."""
-    return _guarded(_dot_terms(a, b, dim), dim, "dot_fixed", a, b)
-
-
-def l2_norm_fixed(a: str, dim: int) -> Column:
-    """Codegen'd L2 norm of a fixed-``dim`` array column (by NAME).
-
-    A NULL array yields 0.0, NOT NULL — deliberately: every consumer
-    guards the denominator with ``!= 0`` so 0-vs-NULL is
-    indistinguishable downstream, and the NON-NULLABLE output stops
-    InferFiltersFromConstraints from deriving an ``isnotnull(norm)``
-    predicate that pushdown would substitute into the scan filter as the
-    whole 64-term sum — generated twice per row and over janino's 64KB
-    method limit (measured on the batch_search stage)."""
-    return F.expr(
-        f"coalesce(CASE WHEN {a} IS NULL THEN CAST(NULL AS DOUBLE) "
-        f"WHEN size({a}) = {dim} THEN sqrt({_sq_terms(a, dim)}) "
-        f"ELSE CAST(raise_error('l2_norm_fixed: input dim != {dim}') "
-        f"AS DOUBLE) END, 0.0D)"
-    )
-
-
-def cosine_similarity_fixed(a: str, b: str, dim: int) -> Column:
-    """Codegen'd cosine similarity of two fixed-``dim`` array columns (by
-    NAME); NULL for zero-norm inputs (the ANSI divide guard of
-    :func:`cosine_similarity`). Prefer precomputing per-row norms before
-    a pairwise join (``cosine_join_within`` does) — this form recomputes
-    both norms per evaluation, relying on codegen subexpression
-    elimination to fold the duplicated denominator."""
-    denom = f"(sqrt({_sq_terms(a, dim)}) * sqrt({_sq_terms(b, dim)}))"
-    body = (
-        f"CASE WHEN {denom} != 0.0D THEN ({_dot_terms(a, b, dim)}) / {denom} "
-        "END"
-    )
-    return _guarded(body, dim, "cosine_similarity_fixed", a, b)

@@ -23,15 +23,13 @@ from affinity_spark.functions.lits import (
     double_matrix_lit,
     local_df,
 )
-from affinity_spark.functions.vectors import cosine_similarity, dot, l2_norm
-
-
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from affinity_spark.functions.vectors import (
+    cosine_of,
+    dot,
+    l2_norm0,
+    py_l2_norm,
+    sq_dist,
+)
 
 
 def train_centroids(
@@ -90,7 +88,7 @@ def assign(
     # analysis/codegen, not execution, the dominant cost (r5 profile)
     cents = double_matrix_lit(centroids)
     v = F.col(vec_col).cast("array<double>")
-    dists = F.transform(cents, lambda c: _sq_dist(v, c))
+    dists = F.transform(cents, lambda c: sq_dist(v, c))
     # let-bind the k-centroid distance array: argmin references it twice
     # (array_position + array_min) and HOFs re-evaluate outer expressions
     # per reference - unbound this computed k*dim distances TWICE per row
@@ -111,7 +109,6 @@ def search(
     """Top-k by cosine among vectors in the query's ``nprobe`` nearest
     cells — the partition-pruned ANN read (cell is a partition column at
     real scale, so non-probed cells are never scanned)."""
-    import math
 
     def sqd(a, b):
         return sum((x - y) ** 2 for x, y in zip(a, b))
@@ -120,25 +117,19 @@ def search(
     probes = order[:nprobe]
     qcol = double_array_lit(query)  # one JVM call, not one per scalar
     # per-row cost discipline (r15, guide §4.1): the row norm staged once
-    # per row, the query norm computed DRIVER-SIDE (bit-identical: python
-    # floats are IEEE doubles, same left-associated sum, correctly
-    # rounded sqrt — similarity._py_l2_norm), the dot one fold per row —
-    # vs three interpreted folds per row in the inline cosine form
-    from affinity_spark.operators.similarity import _py_l2_norm
-
-    denom = F.col("_rnrm") * F.col("_qnrm")
+    # per row, the query norm computed driver-side (py_l2_norm), the dot
+    # one fold per row — vs three interpreted folds per row inline
     return (
         emb_assigned.filter(F.col("cell").isin(probes))
         .withColumn("_qvec", qcol)
-        .withColumn("_qnrm", F.lit(_py_l2_norm(query)))
-        .withColumn(
-            "_rnrm", F.coalesce(l2_norm(F.col(vec_col)), F.lit(0.0))
-        )
+        .withColumn("_qnrm", F.lit(py_l2_norm(query)))
+        .withColumn("_rnrm", l2_norm0(F.col(vec_col)))
         .select(
             F.col(id_col),
             F.col("cell"),
-            F.when(denom != 0, dot(F.col(vec_col), F.col("_qvec")) / denom)
-            .alias("cosine"),
+            cosine_of(
+                dot(F.col(vec_col), F.col("_qvec")), "_rnrm", "_qnrm"
+            ).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
         .limit(k)
@@ -187,7 +178,7 @@ def batch_search(
         else double_matrix_lit(centroids)
     )
     qv = F.col(qvec_col).cast("array<double>")
-    dists = F.transform(cents, lambda c: _sq_dist(qv, c))
+    dists = F.transform(cents, lambda c: sq_dist(qv, c))
     ranked_cells = let_bound(
         dists,
         lambda d: F.slice(
@@ -216,14 +207,10 @@ def batch_search(
     # equivalent CHEAP `denom != 0` on the staged norm columns (a
     # NULL/zero-norm vector yields denom 0), applied BEFORE the staged
     # dot so the pushed predicate never carries a fold.
-    probes = probes.withColumn(
-        "_qnrm", F.coalesce(l2_norm(F.col("_qv")), F.lit(0.0))
-    )
+    probes = probes.withColumn("_qnrm", l2_norm0(F.col("_qv")))
     denom = F.col("_rnrm") * F.col("_qnrm")
     scored = (
-        emb_assigned.withColumn(
-            "_rnrm", F.coalesce(l2_norm(F.col(vec_col)), F.lit(0.0))
-        )
+        emb_assigned.withColumn("_rnrm", l2_norm0(F.col(vec_col)))
         .join(F.broadcast(probes), "cell")
         .filter(denom != 0)
         .withColumn("_dot", dot(F.col(vec_col), F.col("_qv")))

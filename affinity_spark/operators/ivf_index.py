@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.lits import double_matrix_lit, local_df
+from affinity_spark.functions.vectors import sq_dist
 from affinity_spark.operators.ivf import assign, batch_search, search, train_centroids
 from affinity_spark.sources.keyed_table import KeyedTable
 
@@ -474,13 +475,12 @@ class IVFIndex:
         from pyspark.sql import Window
 
         from affinity_spark.functions.text import let_bound
-        from affinity_spark.operators.ivf import _sq_dist
         from affinity_spark.operators.pq import query_distance_tables
 
         books = self.pq_codebooks()
         cents = self.codebook_lit()
         qv = F.col(qvec_col).cast("array<double>")
-        dists = F.transform(cents, lambda c: _sq_dist(qv, c))
+        dists = F.transform(cents, lambda c: sq_dist(qv, c))
         ranked_cells = let_bound(
             dists,
             lambda d: F.slice(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.lits import double_matrix_lit
+from affinity_spark.functions.vectors import sq_dist
 from affinity_spark.operators.ivf import train_centroids
 
 
@@ -64,7 +65,6 @@ def code_columns(
     maintained ``IVFIndex``, whose assigned table carries these columns
     so ADC search scans codes instead of raw vectors."""
     from affinity_spark.functions.text import let_bound
-    from affinity_spark.operators.ivf import _sq_dist
 
     vec = F.col(vec_col).cast("array<double>")
     cols = []
@@ -81,7 +81,7 @@ def code_columns(
         code = let_bound(
             sub,
             lambda sv: let_bound(
-                F.transform(book_lit, lambda c: _sq_dist(sv, c)),
+                F.transform(book_lit, lambda c: sq_dist(sv, c)),
                 lambda d: F.array_position(d, F.array_min(d)) - 1,
             ),
         )
@@ -113,7 +113,6 @@ def query_distance_tables(
     broadcast with the query row, and each candidate row costs m
     ``element_at`` lookups regardless of dimension."""
     from affinity_spark.functions.text import let_bound
-    from affinity_spark.operators.ivf import _sq_dist
 
     qv = F.col(qvec_col).cast("array<double>")
     d_sub = len(codebooks[0][0])
@@ -131,7 +130,7 @@ def query_distance_tables(
         )
         sub = F.slice(qv, s * d_sub + 1, d_sub)
         tab = let_bound(
-            sub, lambda sv: F.transform(book_lit, lambda c: _sq_dist(sv, c))
+            sub, lambda sv: F.transform(book_lit, lambda c: sq_dist(sv, c))
         )
         cols.append(tab.alias(f"_t{s}"))
     return cols

@@ -12,34 +12,20 @@ Three tiers:
                         hyperplanes from an LCG, sign-bit bucket per vector —
                         the ANN scale path when no IVF assignment exists.
 
-All dot products run JVM-side via zip_with/aggregate (functions.vectors);
-a numpy ``mapInPandas`` variant is provided for very wide vectors where
-SIMD beats codegen.
+All dot products and norms run JVM-side via zip_with/aggregate, scored
+with the staged-cosine helpers of ``functions.vectors`` (norms once per
+row, the dot once per pair).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.lits import double_array_lit
-from affinity_spark.functions.vectors import cosine_similarity, dot, l2_norm
-
-
-def _py_l2_norm(vec: Sequence[float]) -> float:
-    """Driver-side L2 norm of a literal query vector, bit-identical to the
-    executor fold: python floats ARE IEEE doubles, the sum is the same
-    left-associated 0.0-seeded chain, and sqrt is correctly rounded in
-    both runtimes."""
-    import math
-
-    acc = 0.0
-    for x in vec:
-        acc = acc + float(x) * float(x)
-    return math.sqrt(acc)
+from affinity_spark.functions.vectors import cosine_of, dot, l2_norm0, py_l2_norm
 
 
 def knn_to_query(
@@ -48,7 +34,6 @@ def knn_to_query(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k rows by cosine similarity to a single query vector.
 
@@ -59,27 +44,22 @@ def knn_to_query(
     ``cosine_similarity`` paid THREE interpreted folds per corpus row
     (dot + both norms). The row norm is staged once per row, the query
     norm once per query (in the 1-row broadcast frame, or driver-side
-    for a literal vector), so each row pays dot + one norm. ``dim`` is
-    accepted for source compatibility but no longer required — the fold
-    forms carry their own width handling. (A flat fixed-dim unrolling
-    was measured SLOWER at row volume: it exceeds HotSpot's huge-method
-    JIT limit and runs in the bytecode interpreter; see
-    functions/vectors.py.)
+    for a literal vector), so each row pays dot + one norm. (A flat
+    fixed-dim unrolling was measured SLOWER at row volume: it exceeds
+    HotSpot's huge-method JIT limit and runs in the bytecode
+    interpreter; see OPTIMIZATION_r15.md §1.)
     """
-    nrm_row = F.coalesce(l2_norm(F.col(vec_col)), F.lit(0.0))
     if isinstance(query, DataFrame):
         q = query.select(F.col(vec_col).alias("_qvec")).select(
-            "_qvec",
-            F.coalesce(l2_norm(F.col("_qvec")), F.lit(0.0)).alias("_qnrm"),
+            "_qvec", l2_norm0(F.col("_qvec")).alias("_qnrm")
         )
         joined = emb.crossJoin(F.broadcast(q))
     else:
         joined = emb.withColumn(
             "_qvec", double_array_lit(query)
-        ).withColumn("_qnrm", F.lit(_py_l2_norm(query)))
-    joined = joined.withColumn("_rnrm", nrm_row)
-    denom = F.col("_rnrm") * F.col("_qnrm")
-    cos = F.when(denom != 0, dot(F.col(vec_col), F.col("_qvec")) / denom)
+        ).withColumn("_qnrm", F.lit(py_l2_norm(query)))
+    joined = joined.withColumn("_rnrm", l2_norm0(F.col(vec_col)))
+    cos = cosine_of(dot(F.col(vec_col), F.col("_qvec")), "_rnrm", "_qnrm")
     scored = joined.select(F.col(id_col), cos.alias("cosine_raw"))
     return scored.orderBy(F.col("cosine_raw").desc(), F.col(id_col).asc()).limit(k)
 
@@ -118,7 +98,7 @@ def cosine_join_within(
     3.4x less CPU at identical output. The fold stays a HOF on purpose:
     a flat 64-term codegen'd sum exceeds HotSpot's huge-method JIT
     limit and runs in the BYTECODE interpreter, 3.5x slower than
-    Catalyst's fold interpreter (measured; see functions/vectors.py).
+    Catalyst's fold interpreter (measured; see OPTIMIZATION_r15.md §1).
     Norms are coalesced to 0.0 (non-nullable) so no isnotnull constraint
     is inferred and pushed into the scan as a substituted fold."""
     if bucket_cap is not None:
@@ -128,7 +108,7 @@ def cosine_join_within(
         keys = [bucket_col, "_salt"]
     else:
         keys = [bucket_col]
-    nrm = F.coalesce(l2_norm(F.col(vec_col)), F.lit(0.0))
+    nrm = l2_norm0(F.col(vec_col))
     a = emb.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("v_a"),
@@ -141,7 +121,6 @@ def cosine_join_within(
         nrm.alias("_nb"),
         *keys,
     )
-    denom = F.col("_na") * F.col("_nb")
     return (
         a.join(b, keys)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -149,7 +128,7 @@ def cosine_join_within(
         .select(
             "id_a",
             "id_b",
-            F.when(denom != 0, F.col("_dot") / denom).alias("cosine"),
+            cosine_of("_dot", "_na", "_nb").alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
     )
@@ -180,7 +159,7 @@ def hard_negatives(
     # exactly equivalent to the old NULL-cosine filter (a NULL/zero-norm
     # vector yields denom 0) without duplicating a fold into the pushed
     # predicate; see cosine_join_within
-    nrm = F.coalesce(l2_norm(F.col(vec_col)), F.lit(0.0))
+    nrm = l2_norm0(F.col(vec_col))
     a = emb.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("v_a"),
@@ -276,34 +255,6 @@ def lsh_hyperplane_buckets(
         F.col(id_col), F.col(vec_col), *[F.col(c) for c in keep_cols],
         bucket.alias("bucket"),
     )
-
-
-def knn_mapinpandas(
-    emb: DataFrame,
-    query: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """numpy variant of knn_to_query: Arrow-batched per-partition top-k then
-    global TakeOrdered. Wins for dim >~ 1k where BLAS beats codegen."""
-    import numpy as np
-
-    qv = None
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nonlocal qv
-        q = np.asarray(query, dtype=np.float64)
-        qn = np.linalg.norm(q)
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-            out = pd.DataFrame({id_col: pdf[id_col], "cosine": np.round(sims, 4)})
-            yield out.nlargest(min(k, len(out)), "cosine")
-
-    schema = f"{id_col} long, cosine double"
-    scored = emb.select(id_col, vec_col).mapInPandas(score, schema)
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
 def scalar_quantize_int8(

@@ -31,6 +31,22 @@ def formatted_plan(df: DataFrame) -> str:
     return jdf.queryExecution().explainString(mode)
 
 
+def normalize_plan(text: str) -> str:
+    """Mask what differs between two processes in a plan string, so two
+    dumps of the same plan diff clean: expression ids (``#141``), the
+    lambda-variable suffix the JVM draws from one global counter
+    (``x_54``, ``acc_3``), exchange ``plan_id``s, and the scratch paths a
+    run creates (``mkdtemp`` roots such as ``affinity_ivf_k3xtd_08`` and
+    KeyedTable version dirs ``v<millis>-<hex8>``). Node ids (``(12)``)
+    are left alone — they are positional, and ``tools/plan_audit.py``
+    counts them."""
+    text = re.sub(r"#\d+", "#N", text)
+    text = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1_N", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=N", text)
+    text = re.sub(r"\b(affinity_[a-z]+_)[a-z0-9_]{8}(?=/)", r"\1X", text)
+    return re.sub(r"\bv\d{16}-[0-9a-f]{8}\b", "vN", text)
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries from every scan in the plan."""
     plan = formatted_plan(df)

@@ -16,29 +16,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from affinity_spark.functions.vectors import cosine_of, dot, l2_norm0, sq_dist
 from affinity_spark.operators import similarity as sim
 
 from affinity_spark.registry._shared import _t
-
-
-def _nrm0(col):
-    """Staged-norm helper (r15 fold-count discipline): one fold per row,
-    coalesced to 0.0 so the column is NON-NULLABLE — no isnotnull
-    constraint is inferred and pushdown-substituted into scans — and a
-    NULL/zero-norm vector yields denom 0, which every consumer's
-    `denom != 0` guard maps to the same NULL cosine as before."""
-    from affinity_spark.functions.vectors import l2_norm
-
-    return F.coalesce(l2_norm(col), F.lit(0.0))
-
-
-def _cos_staged(vec_col, qv_col, rnrm="_rnrm", qnrm="_qnrm"):
-    """when(denom != 0, dot/denom) over staged norms — ONE fold per
-    evaluation instead of the three the inline cosine_similarity paid."""
-    from affinity_spark.functions.vectors import dot
-
-    denom = F.col(rnrm) * F.col(qnrm)
-    return F.when(denom != 0, dot(F.col(vec_col), F.col(qv_col)) / denom)
 
 
 def emb_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,17 +593,17 @@ def emb_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             (F.col("qb").bitwiseXOR(F.col("flip"))).alias("bucket"),
             F.col("qv"),
-            _nrm0(F.col("qv")).alias("_qnrm"),
+            l2_norm0(F.col("qv")).alias("_qnrm"),
         )
     )
     cands = (
         bucketed.filter(F.col("vec_id") != 0)
-        .withColumn("_rnrm", _nrm0(F.col("embedding")))
+        .withColumn("_rnrm", l2_norm0(F.col("embedding")))
         .join(F.broadcast(q), "bucket")
     )
     scored = cands.select(
         "vec_id",
-        _cos_staged("embedding", "qv").alias("c"),
+        cosine_of(dot(F.col("embedding"), F.col("qv")), "_rnrm", "_qnrm").alias("c"),
     )
     return (
         scored.orderBy(F.col("c").desc(), F.col("vec_id").asc())
@@ -768,17 +749,17 @@ def emb_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("bucket").alias("qb"),
         F.col("embedding").alias("qv"),
-        _nrm0(F.col("embedding")).alias("_qnrm"),
+        l2_norm0(F.col("embedding")).alias("_qnrm"),
     )
     cands = bucketed.filter(F.col("vec_id") >= 4).withColumn(
-        "_rnrm", _nrm0(F.col("embedding"))
+        "_rnrm", l2_norm0(F.col("embedding"))
     )
     scored = cands.crossJoin(F.broadcast(qs)).select(
         "qid",
         "vec_id",
         "bucket",
         "qb",
-        _cos_staged("embedding", "qv").alias("c"),
+        cosine_of(dot(F.col("embedding"), F.col("qv")), "_rnrm", "_qnrm").alias("c"),
     )
     # Both top-10 sets are subsets of the SAME scored frame (unique
     # (qid, vec_id)) under the SAME total order, so the old
@@ -875,16 +856,16 @@ def emb_bitq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
         F.col("code").alias("qc"),
-        _nrm0(F.col("embedding")).alias("_qnrm"),
+        l2_norm0(F.col("embedding")).alias("_qnrm"),
     )
     scored = (
         coded.filter(F.col("vec_id") >= 4)
-        .withColumn("_rnrm", _nrm0(F.col("embedding")))
+        .withColumn("_rnrm", l2_norm0(F.col("embedding")))
         .crossJoin(F.broadcast(qs))
         .select(
             "qid",
             "vec_id",
-            _cos_staged("embedding", "qv").alias("c"),
+            cosine_of(dot(F.col("embedding"), F.col("qv")), "_rnrm", "_qnrm").alias("c"),
             hamming_words(F.col("code"), F.col("qc")).alias("h"),
         )
     )
@@ -967,20 +948,20 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
         F.slice(F.col("embedding"), 1, 16).alias("_qv16"),
-        _nrm0(F.col("embedding")).alias("_qnrm"),
-        _nrm0(F.slice(F.col("embedding"), 1, 16)).alias("_qnrm16"),
+        l2_norm0(F.col("embedding")).alias("_qnrm"),
+        l2_norm0(F.slice(F.col("embedding"), 1, 16)).alias("_qnrm16"),
     )
     scored = (
         emb.filter(F.col("vec_id") >= 4)
         .withColumn("_v16", F.slice(F.col("embedding"), 1, 16))
-        .withColumn("_rnrm", _nrm0(F.col("embedding")))
-        .withColumn("_rnrm16", _nrm0(F.col("_v16")))
+        .withColumn("_rnrm", l2_norm0(F.col("embedding")))
+        .withColumn("_rnrm16", l2_norm0(F.col("_v16")))
         .crossJoin(F.broadcast(qs))
         .select(
             "qid",
             "vec_id",
-            _cos_staged("embedding", "qv").alias("c"),
-            _cos_staged("_v16", "_qv16", "_rnrm16", "_qnrm16").alias("ct"),
+            cosine_of(dot(F.col("embedding"), F.col("qv")), "_rnrm", "_qnrm").alias("c"),
+            cosine_of(dot(F.col("_v16"), F.col("_qv16")), "_rnrm16", "_qnrm16").alias("ct"),
         )
     )
     # Same single-pass shape as emb_bitq_recall: both top-10 sets come
@@ -1079,18 +1060,19 @@ def emb_srp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("y").alias("qy"),
         F.col("ny").alias("qny"),
-        _nrm0(F.col("embedding")).alias("_qnrm"),
+        l2_norm0(F.col("embedding")).alias("_qnrm"),
     )
     cands = proj.filter(F.col("vec_id") >= 4).withColumn(
-        "_rnrm", _nrm0(F.col("embedding"))
+        "_rnrm", l2_norm0(F.col("embedding"))
     )
-    cp_den = F.sqrt(F.col("ny").cast("double")) * F.sqrt(F.col("qny").cast("double"))
     scored = cands.crossJoin(F.broadcast(qs)).select(
         "qid",
         "vec_id",
-        _cos_staged("embedding", "qv").alias("ct"),
-        F.when(
-            cp_den != 0, dot_int(F.col("y"), F.col("qy")).cast("double") / cp_den
+        cosine_of(dot(F.col("embedding"), F.col("qv")), "_rnrm", "_qnrm").alias("ct"),
+        cosine_of(
+            dot_int(F.col("y"), F.col("qy")).cast("double"),
+            F.sqrt(F.col("ny").cast("double")),
+            F.sqrt(F.col("qny").cast("double")),
         ).alias("cp"),
     )
     # Same single-pass shape as emb_bitq_recall: both top-10 sets come
@@ -1360,8 +1342,6 @@ def emb_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ quantization). Integer (query_id, n_hits) rows."""
     from pyspark.sql import Window
 
-    from affinity_spark.operators.ivf import _sq_dist
-
     emb = _t(spark, sf_dir, "embeddings")
     idx = _shared_emb_ivf(spark, emb, sf_dir)
     qs = emb.filter(F.col("vec_id") < 4).select(
@@ -1372,7 +1352,7 @@ def emb_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = emb.crossJoin(F.broadcast(qs)).select(
         "qid",
         "vec_id",
-        _sq_dist(
+        sq_dist(
             F.col("embedding").cast("array<double>"),
             F.col("qvec").cast("array<double>"),
         ).alias("d"),
@@ -1516,12 +1496,12 @@ def emb_bitq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(50)
     )
     return (
-        coarse.withColumn("_rnrm", _nrm0(F.col("embedding")))
-        .withColumn("_qnrm", _nrm0(F.col("_qvec")))
+        coarse.withColumn("_rnrm", l2_norm0(F.col("embedding")))
+        .withColumn("_qnrm", l2_norm0(F.col("_qvec")))
         .select(
             "vec_id",
             "hamming",
-            _cos_staged("embedding", "_qvec").alias("_cos"),
+            cosine_of(dot(F.col("embedding"), F.col("_qvec")), "_rnrm", "_qnrm").alias("_cos"),
         )
         .orderBy(F.col("_cos").desc(), "vec_id")
         .limit(10)
@@ -1643,16 +1623,16 @@ def emb_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid", "vec_id"
     )
     scored = (
-        cands.withColumn("_rnrm", _nrm0(F.col("embedding")))
+        cands.withColumn("_rnrm", l2_norm0(F.col("embedding")))
         .crossJoin(
             F.broadcast(
-                qs.withColumn("_qnrm", _nrm0(F.col("qvec")))
+                qs.withColumn("_qnrm", l2_norm0(F.col("qvec")))
             )
         )
         .select(
             "qid",
             "vec_id",
-            _cos_staged("embedding", "qvec").alias("c"),
+            cosine_of(dot(F.col("embedding"), F.col("qvec")), "_rnrm", "_qnrm").alias("c"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("c").desc(), F.col("vec_id").asc())
@@ -1850,7 +1830,6 @@ def emb_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from affinity_spark.functions.vectors import dot as _vdot
     from affinity_spark.operators.cluster_store import ClusterStore
     from affinity_spark.operators.ivf import assign
     from affinity_spark.operators.ivf_index import IVFIndex
@@ -1897,7 +1876,7 @@ def emb_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 committed.select(
                     F.col("vec_id").alias("id_a"),
                     F.col("embedding").alias("v_a"),
-                    _nrm0(F.col("embedding")).alias("_na"),
+                    l2_norm0(F.col("embedding")).alias("_na"),
                     "cell",
                 )
                 .join(
@@ -1905,20 +1884,17 @@ def emb_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ab.select(
                             F.col("vec_id").alias("id_b"),
                             F.col("embedding").alias("v_b"),
-                            _nrm0(F.col("embedding")).alias("_nb"),
+                            l2_norm0(F.col("embedding")).alias("_nb"),
                             "cell",
                         )
                     ),
                     "cell",
                 )
-                .withColumn("_dot", _vdot(F.col("v_a"), F.col("v_b")))
+                .withColumn("_dot", dot(F.col("v_a"), F.col("v_b")))
                 .select(
                     "id_a",
                     "id_b",
-                    F.when(
-                        F.col("_na") * F.col("_nb") != 0,
-                        F.col("_dot") / (F.col("_na") * F.col("_nb")),
-                    ).alias("c"),
+                    cosine_of("_dot", "_na", "_nb").alias("c"),
                 )
                 .filter(F.col("c") >= 0.35)
                 .select("id_a", "id_b")

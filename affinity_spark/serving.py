@@ -158,6 +158,16 @@ def _snapshot_mask(
     return conds
 
 
+def _same_row(a: Mapping[str, object], b: Mapping[str, object]) -> bool:
+    """Row equality as the CDF's NULL-safe struct comparison sees it:
+    ``None`` equals ``None`` and a float ``NaN`` equals ``NaN``."""
+    return a.keys() == b.keys() and all(
+        x == y or (isinstance(x, float) and isinstance(y, float)
+                   and math.isnan(x) and math.isnan(y))
+        for x, y in ((a[k], b[k]) for k in a)
+    )
+
+
 class Subscription:
     """Handle for one per-key changelog subscription: ``take(n)`` blocks
     for the next n events; ``stop()`` tears the stream down."""
@@ -206,16 +216,16 @@ class Subscription:
 
 
 class TableSubscription:
-    """Per-key push fed by the TABLE's own commit stream — the reference's
+    """Per-key push fed by the TABLE's own commits — the reference's
     mediator push wired to gateway WRITES: a poller watches the version
-    pointer and diffs consecutive committed snapshots
-    (``KeyedTable.changes_between``, the CDF read), so a POST/WS upsert
-    notifies subscribers with no external changelog. Events are flat row
-    dicts: inserts/updates carry the NEW values plus ``_change``; deletes
-    carry the key plus ``_change: 'delete'``. A commit burst that outruns
-    version retention degrades to a ``resync`` event carrying the key's
-    current state (never a silent gap). Duck-typed with
-    :class:`Subscription` (take/poll/events/active/stop)."""
+    pointer and, on each new version, diffs the key's current rows against
+    the rows it last delivered, so a POST/WS upsert notifies subscribers
+    with no external changelog. Events are flat row dicts: inserts/updates
+    carry the NEW values plus ``_change``; deletes carry the key plus
+    ``_change: 'delete'``. The diff needs no retained older snapshot, so a
+    commit burst between two polls (a slow poller, version retention of 2)
+    still yields exactly the burst's net changes, never a gap. Duck-typed
+    with :class:`Subscription` (take/poll/events/active/stop)."""
 
     def __init__(self, gateway, key: Mapping[str, object],
                  poll_s: float = 0.25, include_initial: bool = True):
@@ -226,54 +236,51 @@ class TableSubscription:
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._last = self._tbl._current_version_dir()
+        rows = gateway.point_get(key)
+        self._state = {self._key_of(r): r for r in rows}
         if include_initial:
-            self._buffer.extend(gateway.point_get(key))
+            self._buffer.extend(rows)
         self._thread = threading.Thread(
             target=self._poll_loop, args=(poll_s,), daemon=True
         )
         self._thread.start()
 
+    def _key_of(self, row: Mapping[str, object]) -> tuple:
+        return tuple(row[k] for k in self._tbl.key_cols)
+
     def _poll_loop(self, poll_s: float) -> None:
         while not self._stop.is_set():
             try:
-                cur = self._tbl._current_version_dir()
-                if cur != self._last:
-                    try:
-                        events = self._events_between(self._last, cur)
-                    except Exception:  # noqa: BLE001 - reclaimed snapshot
-                        events = [
-                            {**r, "_change": "resync"}
-                            for r in self._gw.point_get(self._key)
-                        ]
-                    with self._lock:
-                        self._buffer.extend(events)
-                    self._last = cur
-            except Exception:  # noqa: BLE001 - poller must not die silently mid-loop
+                self._poll_once()
+            except Exception:  # noqa: BLE001 - poller must not die; retried next tick
                 pass
             self._stop.wait(poll_s)
 
-    def _events_between(self, old_dir: str, new_dir: str) -> list[dict]:
-        import os as _os
+    def _poll_once(self) -> None:
+        cur = self._tbl._current_version_dir()
+        if cur != self._last:
+            events = self._diff(self._gw.point_get(self._key))
+            with self._lock:
+                self._buffer.extend(events)
+            self._last = cur
 
-        ch = self._tbl.changes_between(
-            _os.path.basename(old_dir), _os.path.basename(new_dir)
-        )
-        cond = None
-        for col, val in self._key.items():
-            c = F.col(col).eqNullSafe(F.lit(val))
-            cond = c if cond is None else cond & c
-        if cond is not None:
-            ch = ch.filter(cond)
+    def _diff(self, rows: list[dict]) -> list[dict]:
+        """Events taking the delivered state to ``rows`` (and adopt it):
+        the KeyedTable CDF classification (insert/update/delete), with
+        values compared NULL-safe and ``NaN`` equal to ``NaN``."""
+        new = {self._key_of(r): r for r in rows}
         events = []
-        for r in ch.collect():
-            d = r.asDict(recursive=True)
-            keys = {k: d[k] for k in self._tbl.key_cols}
-            if d["change"] == "delete":
-                events.append({**keys, "_change": "delete"})
-            else:
-                events.append(
-                    {**keys, **(d.get("new_values") or {}), "_change": d["change"]}
-                )
+        for k, r in new.items():
+            old = self._state.get(k)
+            if old is None:
+                events.append({**r, "_change": "insert"})
+            elif not _same_row(old, r):
+                events.append({**r, "_change": "update"})
+        for k in self._state.keys() - new.keys():
+            events.append(
+                {**dict(zip(self._tbl.key_cols, k)), "_change": "delete"}
+            )
+        self._state = new
         return events
 
     def take(self, n: int, timeout_s: float = 20.0) -> list[dict]:
@@ -592,7 +599,7 @@ class ServingGateway:
         """Per-key subscription fed by the TABLE's own commits: a gateway
         write (POST / WS record / direct upsert) notifies subscribers with
         no external changelog stream — the reference's
-        write→mediator→push loop closed over the KeyedTable CDF."""
+        write→mediator→push loop closed over the table's commits."""
         return TableSubscription(
             self, key, poll_s=poll_s, include_initial=include_initial
         )

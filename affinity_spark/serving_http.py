@@ -290,7 +290,7 @@ class HttpGateway:
     def register_table_stream(self, name: str, poll_s: float = 0.25) -> None:
         """Enable /subscribe/{name} fed by the route's TABLE commits: a
         write through this gateway (POST, DELETE, WS record) pushes to
-        subscribers via the KeyedTable CDF — the reference's
+        subscribers by diffing the key's rows per commit — the reference's
         write→mediator→push loop with no external changelog stream.
         Mutually exclusive with :meth:`register_stream` (an explicit
         changelog wins when both are set)."""
@@ -337,29 +337,33 @@ class HttpGateway:
                     if isinstance(payload, bytes)
                     else json.dumps(payload, default=str).encode()
                 )
-                self.send_response(code)
-                self.send_header("Content-Type", ctype)
-                for k, v in extra_headers:
-                    self.send_header(k, v)
                 # F9: gzip response encoding when the client accepts it
                 # (the reference's http/Encoder.scala content negotiation)
                 accept = self.headers.get("Accept-Encoding", "")
-                if "gzip" in accept and len(body) > 0:
+                gzipped = "gzip" in accept and len(body) > 0
+                if gzipped:
                     import gzip
 
                     body = gzip.compress(body)
-                    self.send_header("Content-Encoding", "gzip")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
                 # Gateway.trace completion: one mark per response, status
                 # < 400 = success (the reference's rule); requests that
                 # never reach a do_* meter hook (static /affinity.js,
-                # /metrics itself) carry no _m_t0 and are unmetered
+                # /metrics itself) carry no _m_t0 and are unmetered. The
+                # mark lands BEFORE the status line goes out: a client that
+                # reads /metrics right after its response must see it.
                 t0 = getattr(self, "_m_t0", None)
                 if t0 is not None:
                     metrics.mark(self._m_group, t0, code < 400)
                     self._m_t0 = None
+                self.send_response(code)
+                self.send_header("Content-Type", ctype)
+                for k, v in extra_headers:
+                    self.send_header(k, v)
+                if gzipped:
+                    self.send_header("Content-Encoding", "gzip")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
 
             def _resolve(self, ops: tuple[str, ...]):
                 """Shared route resolution + auth for every method: returns

@@ -143,6 +143,41 @@ def test_batch_search_matches_per_query_search(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_search_on_hostile_rows_scores_only_real_vectors(spark):
+    """A NULL-embedding row and an all-zero row in a probed cell: the
+    single-query search ranks them after every scored row, and
+    batch_search drops them; neither raises. The cell column is built by
+    hand so both rows sit in a probed cell whatever assign would do."""
+    from affinity_spark.operators.ivf import batch_search
+
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    emb = spark.createDataFrame(
+        [
+            (0, [1.0, 0.1], 0),
+            (1, [0.9, 0.5], 0),
+            (2, None, 0),
+            (3, [0.0, 0.0], 0),
+            (4, [0.1, 1.0], 1),
+            (5, [-1.0, 0.2], 1),
+        ],
+        "vec_id long, embedding array<double>, cell int",
+    )
+    got = search(emb, cents, [1.0, 0.0], 6, nprobe=2).collect()
+    assert [r.vec_id for r in got[:4]] == [0, 1, 4, 5]
+    assert all(r.cosine is not None for r in got[:4])
+    assert {r.vec_id for r in got[4:]} == {2, 3}
+    assert all(r.cosine is None for r in got[4:])
+
+    qs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0])], "qid int, qvec array<double>"
+    )
+    rows = batch_search(emb, cents, qs, k=6, nprobe=2).collect()
+    ranked = sorted((r.rnk, r.vec_id) for r in rows if r.qid == 0)
+    assert ranked == [(1, 0), (2, 1), (3, 4), (4, 5)]
+    # the zero query vector has no cosine to anything
+    assert all(r.qid == 0 for r in rows)
+
+
 def test_cell_partitioned_layout_prunes_unprobed_cells(spark, tmp_path):
     """The scale claim behind every IVF read ("cell is a partition column,
     unprobed cells are never scanned") pinned physically: assigned vectors

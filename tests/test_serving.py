@@ -89,6 +89,38 @@ def test_per_key_subscription(spark, tmp_path):
         sub.stop()
 
 
+def test_table_subscription_survives_commit_burst(spark, tmp_path):
+    """Three commits land between two polls — with the default retention
+    of 2 the poller's last-seen snapshot is reclaimed by then. The
+    subscriber still gets exactly the burst's net changes to its key
+    (insert, update, delete), not a resend of the key's whole state."""
+    from affinity_spark.sources.keyed_table import KeyedTable
+
+    tbl = KeyedTable(
+        spark, str(tmp_path / "bank"), ["sortcode", "account", "txn"], "ts",
+        num_buckets=2,
+    )
+    tbl.overwrite(spark.createDataFrame(BATCH_1, SCHEMA))
+    gw = ServingGateway(table=tbl)
+    key = {"sortcode": "11-10-30", "account": 10233321}
+    # an hour-long tick: the poller checks once at start, then only when
+    # the test steps it
+    sub = gw.subscribe_table(key, poll_s=3600)
+    try:
+        assert sorted(e["txn"] for e in sub.take(2, timeout_s=30)) == [1001, 1003]
+        base = tbl._current_version_dir()
+        gw.upsert([BATCH_2[1]])  # insert 1005 (ours)
+        gw.upsert([{**BATCH_1[0], "amount": 1.5, "ts": BATCH_1[0]["ts"] + 1}])
+        gw.delete({**key, "txn": 1003})
+        assert os.path.basename(base) not in tbl.versions()
+        sub._poll_once()
+        got = sorted((e["txn"], e["_change"]) for e in sub.take(3, timeout_s=5))
+        assert got == [(1001, "update"), (1003, "delete"), (1005, "insert")]
+        assert sub.poll(timeout_s=0.2) == []
+    finally:
+        sub.stop()
+
+
 def test_insert_only_cas_ties_merge_to_antijoin_base(spark, tmp_path):
     """insert() derives its fresh-keys anti-join from ONE snapshot and
     must commit AGAINST THAT BASE: an external (non-gateway) writer

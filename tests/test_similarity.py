@@ -54,14 +54,43 @@ def test_cosine_join_never_crosses_buckets(spark):
     assert cosine_join_within(df, "label", 0.5).count() == 0
 
 
-def test_knn_mapinpandas_agrees_with_expression_path(spark):
-    from affinity_spark.operators.similarity import knn_mapinpandas
+def _emb_hostile(spark):
+    """_emb plus a NULL-embedding row (5) and an all-zero row (6): neither
+    has a cosine to anything. 5 is labelled y so x anchors could pick it
+    as a hard negative if it were ever scored."""
+    hostile = spark.createDataFrame(
+        [(5, None, "y"), (6, [0.0, 0.0, 0.0], "x")],
+        "vec_id int, embedding array<double>, label string",
+    )
+    return _emb(spark).unionByName(hostile).withColumn("bucket", F.lit(0))
 
-    emb = _emb(spark).withColumn("vec_id", F.col("vec_id").cast("long"))
-    q = [1.0, 0.0, 0.0]
-    expr_ids = [r.vec_id for r in knn_to_query(emb, q, 3).collect()]
-    np_ids = [r.vec_id for r in knn_mapinpandas(emb, q, 3).collect()]
-    assert np_ids == expr_ids
+
+def test_knn_ranks_hostile_rows_last(spark):
+    emb = _emb_hostile(spark)
+    q = emb.filter(F.col("vec_id") == 0).select("embedding")
+    for query in ([1.0, 0.0, 0.0], q):
+        got = knn_to_query(emb, query, 7).collect()
+        assert [r.vec_id for r in got] == [0, 1, 2, 3, 4, 5, 6]
+        assert all(r.cosine_raw is not None for r in got[:5])
+        assert got[5].cosine_raw is None and got[6].cosine_raw is None
+    # a zero query vector scores nothing and raises nothing
+    got = knn_to_query(emb, [0.0, 0.0, 0.0], 3).collect()
+    assert len(got) == 3 and all(r.cosine_raw is None for r in got)
+
+
+def test_cosine_join_within_drops_hostile_rows(spark):
+    pairs = cosine_join_within(_emb_hostile(spark), "label", -1.0).collect()
+    # every scoreable same-label pair passes a threshold of -1; the two
+    # hostile rows drop out on their NULL cosine
+    assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1), (0, 4), (1, 4), (2, 3)}
+
+
+def test_hard_negatives_never_pick_hostile_rows(spark):
+    from affinity_spark.operators.similarity import hard_negatives
+
+    got = hard_negatives(_emb_hostile(spark), "bucket", "label").collect()
+    assert sorted(r.vec_id for r in got) == [0, 1, 2, 3, 4]
+    assert {r.hard_neg_id for r in got} <= {0, 1, 2, 3, 4}
 
 
 def test_hard_negatives_picks_best_cross_label_in_bucket(spark):

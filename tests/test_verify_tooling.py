@@ -49,3 +49,37 @@ def test_frame_hash_int_float_equivalence():
     h1 = vl.frame_hash(["n"], [(2,)])
     h2 = vl.frame_hash(["n"], [(2.0,)])
     assert h1 == h2
+
+
+# a snippet of plans/r15/emb_knn_brute_after.txt, plus a scratch path
+_PLAN = """(7) Exchange
+Arguments: RoundRobinPartitioning(32), REPARTITION_BY_NUM, [plan_id=603]
+
+(8) Project
+Output [2]: [_qvec#139, coalesce(SQRT(aggregate(_qvec#139, 0.0, lambdafunction((lambda x_54#141 + (cast(lambda y_55#142 as double) * cast(lambda y_55#142 as double))), lambda x_54#141, lambda y_55#142, false), lambdafunction(lambda id#143, lambda id#143, false))), 0.0) AS _qnrm#140]
+Location: InMemoryFileIndex [file:/tmp/affinity_ivf_wio91l5w/assigned/v0001792311844050-02d3ffee]
+"""
+
+
+def test_normalize_plan_masks_per_process_counters():
+    import re
+
+    from affinity_spark.plans.introspect import normalize_plan
+
+    # the same plan built in another process: every expression id, lambda
+    # counter and plan_id shifted, another mkdtemp root and table version
+    other = re.sub(
+        r"(#|_|plan_id=)(\d+)", lambda m: f"{m.group(1)}{int(m.group(2)) + 17}", _PLAN
+    ).replace("wio91l5w", "ky3xtd_8").replace("v00017923118", "v00017923119")
+    assert other != _PLAN
+    norm = normalize_plan(_PLAN)
+    assert normalize_plan(other) == norm
+    assert normalize_plan(norm) == norm
+    # node ids, literals, partition counts and plain lambda names survive
+    assert "(7) Exchange" in norm and "(8) Project" in norm
+    assert "RoundRobinPartitioning(32)" in norm and "0.0) AS _qnrm#N" in norm
+    assert "lambda x_N#N" in norm and "lambda id#N" in norm
+    assert "[plan_id=N]" in norm
+    # a real plan change still shows
+    assert normalize_plan(_PLAN.replace("RoundRobin", "Hash")) != norm
+    assert normalize_plan(_PLAN.replace("assigned", "codes")) != norm

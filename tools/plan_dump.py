@@ -2,6 +2,8 @@
 
 Usage: python tools/plan_dump.py <out_dir> <suffix> [sf_dir] q1 q2 ...
 Writes <out_dir>/<query>_<suffix>.txt per query (e.g. plans/r14/foo_before.txt).
+The text is passed through ``normalize_plan``, so dumps of one plan taken in
+two processes (e.g. a parent commit and a change) compare with ``diff -r``.
 Plan shape is scale-invariant for the properties the files document, so the
 default sf is the smallest (fast frame construction, identical operators).
 """
@@ -15,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from affinity_spark import get_spark
-from affinity_spark.plans.introspect import formatted_plan
+from affinity_spark.plans.introspect import formatted_plan, normalize_plan
 
 
 def main() -> None:
@@ -34,7 +36,7 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} — explain('formatted') at {sf_dir}\n")
-            f.write(formatted_plan(queries[name](spark, sf_dir)))
+            f.write(normalize_plan(formatted_plan(queries[name](spark, sf_dir))))
             f.write("\n")
         print(path)
 
