@@ -1,4 +1,4 @@
-.PHONY: test verify verify-full bench plans perf-serve perf-batch
+.PHONY: test verify verify-full bench plans perf-serve perf-batch perf-ingest
 
 test:
 	python -m pytest tests/ -x -q
@@ -21,3 +21,8 @@ perf-serve:
 
 perf-batch:
 	SPARK_GRAFT_CPUS=$$(nproc) python3 perfbench/run.py --workload batch_pipeline --seed 1 --seconds 15 --trace 0
+
+# ingest_stream is not in BENCHMARK.json; run it by hand when a change
+# touches the streaming sinks (streaming/sinks.py, ivm.py)
+perf-ingest:
+	SPARK_GRAFT_CPUS=$$(nproc) python3 perfbench/run.py --workload ingest_stream --seed 1 --seconds 15 --trace 0

@@ -14,10 +14,15 @@ Contract: operators register shared persists via ``track``; whoever owns
 the action cadence (bench.py, tools/verify_local.py, a user's batch loop)
 calls ``release_shared()`` after consuming each query's result. Unlike
 ``spark.catalog.clearCache()`` this drops ONLY the frames the library
-persisted, never the caller's own caches.
+persisted, never the caller's own caches. Process-shared stores live in
+``temp_root`` dirs, which the process removes at exit.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 
@@ -45,3 +50,11 @@ def release_shared() -> int:
         except Exception:
             pass  # session already stopped; nothing to release
     return n
+
+
+def temp_root(prefix: str) -> str:
+    """A new temp dir for a process-shared store, removed at interpreter
+    exit (``release_shared`` leaves it: the stores outlive a query)."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root

@@ -167,7 +167,7 @@ class BandIndex:
         # under a bucket count cached before another instance's rebucket()
         # (stale-modulus placement = the r5 silent-corruption class); a
         # rebucket landing after this read fails the CAS loudly (r12 ADVICE)
-        base_version = self._table._current_version_dir()
+        snap = self._table.snapshot()
         self._effective = None
         touched = new_arr.select(self.id_col).distinct()
         if len(deleted) > 0:
@@ -182,7 +182,7 @@ class BandIndex:
                 self._bucket().alias("_bucket")
             ).distinct().collect()
         ]
-        cur = self._table.read()
+        cur = snap.df
         kept = (
             cur.filter(F.col("_bucket").isin(buckets))
             .join(F.broadcast(touched_p), self.id_col, "left_anti")
@@ -196,7 +196,7 @@ class BandIndex:
             *[F.col(c).cast(cur.schema[c].dataType).alias(c) for c in cur.columns]
         )
         self._table.overwrite_partitions(
-            kept.unionByName(delta), buckets, expected_base=base_version
+            kept.unionByName(delta), buckets, expected_base=snap.version_dir
         )
         touched_p.unpersist()
 

@@ -348,7 +348,7 @@ class ClusterStore:
         # under a bucket count cached before another instance's rebucket()
         # (stale-modulus placement = the r5 silent-corruption class); a
         # rebucket landing after this read fails the CAS loudly (r12 ADVICE)
-        base_version = self._table._current_version_dir()
+        snap = self._table.snapshot()
         self._effective = None
         # touched buckets: new rows' destination buckets + merged
         # clusters' source AND destination buckets
@@ -369,7 +369,7 @@ class ClusterStore:
                 .collect()
             }
         )
-        cur = self._table.read()
+        cur = snap.df
         # a REPLAYED batch's rows are already committed in these buckets:
         # drop any committed row for a batch id before unioning the fresh
         # delta, or the replay doubles every batch row (KeyedTable.read is
@@ -405,7 +405,7 @@ class ClusterStore:
                 ]
             ),
             touched_buckets,
-            expected_base=base_version,
+            expected_base=snap.version_dir,
         )
 
     # --- reads ------------------------------------------------------------
@@ -469,8 +469,8 @@ def shared_clusters(
     regenerated corpus at the same path rebuilds and evicts the
     superseded store instead of serving stale clusters."""
     import shutil
-    import tempfile
 
+    from affinity_spark.cache import temp_root
     from affinity_spark.operators import dedup as dd
     from affinity_spark.operators.postings import _corpus_fingerprint
 
@@ -490,7 +490,7 @@ def shared_clusters(
             return store
         del _SHARED[key]
         shutil.rmtree(store.path, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="affinity_clusters_")
+    root = temp_root("affinity_clusters_")
     store = ClusterStore(spark, root, id_col=id_col)
     # the one-shot build path == the old per-query chain: shingle arrays
     # feed BOTH the band derivation and the verify join (persist per the

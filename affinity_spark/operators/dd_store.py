@@ -101,11 +101,11 @@ class DDStore:
         }
         if not days:
             return
-        if not self._table.exists():
+        snap = self._table.snapshot()
+        if snap.version_dir is None:
             self._table.overwrite(delta, meta=meta)
             return
-        base_version = self._table._current_version_dir()
-        cur = self._table.read().filter(F.col("day").isin(days))
+        cur = snap.df.filter(F.col("day").isin(days))
         merged = (
             cur.unionByName(delta.select(*cur.columns))
             .groupBy("day", "bucket")
@@ -113,7 +113,7 @@ class DDStore:
             .select(*cur.columns)
         )
         self._table.overwrite_partitions(
-            merged, days, expected_base=base_version, meta=meta
+            merged, days, expected_base=snap.version_dir, meta=meta
         )
 
     def maintainer(self, run_id: str, compact_every: int = 32):

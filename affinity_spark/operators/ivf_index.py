@@ -203,8 +203,8 @@ class IVFIndex:
         carries forward — ``exists()`` still sees one consistent index."""
         deleted = list(deleted_ids)  # generators are truthy when exhausted
         codebook = self.codebook()
-        base_version = self._assigned._current_version_dir()
-        cur = self._assigned.read()
+        snap = self._assigned.snapshot()
+        cur = snap.df
         delta = self._assigned_delta(new_vectors, codebook).select(
             # cast to the SNAPSHOT's schema: a delta at a different numeric
             # width would write mixed physical parquet types into one table
@@ -235,7 +235,7 @@ class IVFIndex:
             .select(*cur.columns)
         )
         self._assigned.overwrite_partitions(
-            kept.unionByName(delta), cells, expected_base=base_version
+            kept.unionByName(delta), cells, expected_base=snap.version_dir
         )
         touched_p.unpersist()
 
@@ -328,27 +328,36 @@ class IVFIndex:
         tables = [self._centroids, self._assigned]
         if self._pq_books is not None:
             tables.append(self._pq_books)
-        if not all(t.exists() for t in tables):
-            return False
-        ids = {t.commit_meta().get("ivf_lineage") for t in tables}
-        return len(ids) <= 1
+        snaps = [t.snapshot() for t in tables]
+        ids = {s.meta.get("ivf_lineage") for s in snaps}
+        return all(s.version_dir for s in snaps) and len(ids) <= 1
 
     # --- reads -------------------------------------------------------------
+
+    def _per_version(self, attr: str, table: KeyedTable, build):
+        """``build(snapshot)`` of ``table``'s current version, memoized in
+        ``attr`` by version dir: a retrain commits a new version, which
+        invalidates the memo."""
+        snap = table.snapshot()
+        cached = getattr(self, attr, None)
+        if cached is None or cached[0] != snap.version_dir:
+            cached = (snap.version_dir, build(snap))
+            setattr(self, attr, cached)
+        return cached[1]
 
     def codebook(self) -> list[list[float]]:
         """The committed codebook as a plain list (k rows — tiny by
         design), cell order preserved. Memoized per committed version (a
         serving system holds the model driver-side; re-collecting it per
         query added two driver jobs to every index-served search — the
-        emb_pq_batch_search wall was ~half non-execution, r13). A retrain
-        commits a new version dir, which invalidates the memo."""
-        vdir = self._centroids._current_version_dir()
-        cached = getattr(self, "_codebook_memo", None)
-        if cached is None or cached[0] != vdir:
-            rows = self._centroids.read().orderBy("cell").collect()
-            cached = (vdir, [[float(x) for x in r["cv"]] for r in rows])
-            self._codebook_memo = cached
-        return cached[1]
+        emb_pq_batch_search wall was ~half non-execution, r13)."""
+        return self._per_version(
+            "_codebook_memo", self._centroids,
+            lambda snap: [
+                [float(x) for x in r["cv"]]
+                for r in snap.df.orderBy("cell").collect()
+            ],
+        )
 
     def pq_codebooks(self) -> list[list[list[float]]]:
         """The committed per-subspace PQ codebooks as a nested list
@@ -356,16 +365,14 @@ class IVFIndex:
         Memoized per committed version (see :meth:`codebook`)."""
         if self._pq_books is None:
             raise ValueError("index was opened without pq_m; no PQ codebooks")
-        vdir = self._pq_books._current_version_dir()
-        cached = getattr(self, "_pq_books_memo", None)
-        if cached is None or cached[0] != vdir:
-            rows = self._pq_books.read().orderBy("s", "idx").collect()
+
+        def build(snap) -> list[list[list[float]]]:
             books: list[list[list[float]]] = [[] for _ in range(self.pq_m)]
-            for r in rows:
+            for r in snap.df.orderBy("s", "idx").collect():
                 books[r["s"]].append([float(x) for x in r["cv"]])
-            cached = (vdir, books)
-            self._pq_books_memo = cached
-        return cached[1]
+            return books
+
+        return self._per_version("_pq_books_memo", self._pq_books, build)
 
     def codebook_lit(self):
         """The committed codebook as ONE literal Column, memoized per
@@ -375,31 +382,18 @@ class IVFIndex:
         dominated emb_pq_batch_search's in-set wall (r13 verdict #4).
         Column expressions are immutable plan fragments — reusing one
         across queries is safe."""
-        vdir = self._centroids._current_version_dir()
-        cached = getattr(self, "_codebook_lit_memo", None)
-        if cached is None or cached[0] != vdir:
-            cached = (
-                vdir,
-                double_matrix_lit(self.codebook()),
-            )
-            self._codebook_lit_memo = cached
-        return cached[1]
+        return self._per_version(
+            "_codebook_lit_memo", self._centroids,
+            lambda _snap: double_matrix_lit(self.codebook()),
+        )
 
     def pq_book_lits(self) -> list:
         """Per-subspace PQ codebooks as literal Columns, memoized per
         version (see :meth:`codebook_lit`)."""
-        vdir = self._pq_books._current_version_dir()
-        cached = getattr(self, "_pq_book_lits_memo", None)
-        if cached is None or cached[0] != vdir:
-            cached = (
-                vdir,
-                [
-                    double_matrix_lit(book)
-                    for book in self.pq_codebooks()
-                ],
-            )
-            self._pq_book_lits_memo = cached
-        return cached[1]
+        return self._per_version(
+            "_pq_book_lits_memo", self._pq_books,
+            lambda _snap: [double_matrix_lit(b) for b in self.pq_codebooks()],
+        )
 
     def vectors(self) -> DataFrame:
         """(id, vec, cell[, code_*]) — the maintained assignment table.
@@ -560,8 +554,8 @@ def shared_ivf(
     the superseded index instead of serving stale cells (the
     shared_postings contract)."""
     import shutil
-    import tempfile
 
+    from affinity_spark.cache import temp_root
     from affinity_spark.operators.postings import _corpus_fingerprint
 
     key = (spark.sparkContext.applicationId, corpus_key)
@@ -578,7 +572,7 @@ def shared_ivf(
             return idx
         del _SHARED[key]
         shutil.rmtree(idx.path, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="affinity_ivf_")
+    root = temp_root("affinity_ivf_")
     idx = IVFIndex(
         spark, root, id_col=id_col, vec_col=vec_col, pq_m=pq_m, pq_k=pq_k
     )

@@ -232,7 +232,7 @@ class MediaIndex:
         # a stale modulus merges wrong dirs while hardlinking stale ones,
         # the r5 silent-corruption class). A rebucket landing after this
         # read fails the CAS loudly instead.
-        base_version = self._table._current_version_dir()
+        snap = self._table.snapshot()
         self._effective = None
         touched = new_fps.select(self.id_col).distinct()
         if len(deleted) > 0:
@@ -247,7 +247,7 @@ class MediaIndex:
                 self._bucket().alias("_bucket")
             ).distinct().collect()
         ]
-        cur = self._table.read()
+        cur = snap.df
         kept = (
             cur.filter(F.col("_bucket").isin(buckets))
             .join(F.broadcast(touched_p), self.id_col, "left_anti")
@@ -257,7 +257,7 @@ class MediaIndex:
             *[F.col(c).cast(cur.schema[c].dataType).alias(c) for c in cur.columns]
         )
         self._table.overwrite_partitions(
-            kept.unionByName(delta), buckets, expected_base=base_version
+            kept.unionByName(delta), buckets, expected_base=snap.version_dir
         )
         touched_p.unpersist()
 

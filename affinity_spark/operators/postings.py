@@ -46,6 +46,7 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from affinity_spark.cache import temp_root
 from affinity_spark.functions.lits import local_df
 from affinity_spark.sources.keyed_table import KeyedTable
 
@@ -312,7 +313,7 @@ class PostingsIndex:
         # fail the CAS loudly instead of stamping a stale count over
         # fresh placements (r13 review)
         bases = {
-            t: t._current_version_dir()
+            t: t.snapshot().version_dir
             for t in (self._doclen, *self._tables.values())
         }
         self._effective = None
@@ -392,18 +393,16 @@ class PostingsIndex:
         committed, gram tables not yet) transiently observes the torn
         state; that is indistinguishable from a crash until the refresh's
         remaining commits land."""
-        tables = [self._doclen, *self._tables.values()]
-        if not all(t.exists() for t in tables):
-            return False
-        ids = {t.commit_meta().get("postings_lineage") for t in tables}
-        return len(ids) <= 1
+        snaps = [t.snapshot() for t in (self._doclen, *self._tables.values())]
+        ids = {s.meta.get("postings_lineage") for s in snaps}
+        return all(s.version_dir for s in snaps) and len(ids) <= 1
 
     def check_consistent(self) -> None:
         """Raise if the committed tables disagree on lineage (torn
         build/refresh). Missing tables are NOT an error here — use
         :meth:`exists` for presence."""
-        tables = [t for t in [self._doclen, *self._tables.values()] if t.exists()]
-        ids = {t.commit_meta().get("postings_lineage") for t in tables}
+        snaps = [t.snapshot() for t in (self._doclen, *self._tables.values())]
+        ids = {s.meta.get("postings_lineage") for s in snaps if s.version_dir}
         if len(ids) > 1:
             raise RuntimeError(
                 f"postings index at {self.path} is cross-table inconsistent: "
@@ -534,7 +533,6 @@ def shared_postings(
     query pays the ONE corpus scan; every later query reads the
     materialized tables."""
     import shutil
-    import tempfile
 
     key = (spark.sparkContext.applicationId, corpus_key)
     fp = _corpus_fingerprint(docs)
@@ -553,7 +551,7 @@ def shared_postings(
         # drop the entry and reclaim its on-disk tables before rebuilding
         del _SHARED[key]
         shutil.rmtree(idx.path, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="affinity_postings_")
+    root = temp_root("affinity_postings_")
     idx = PostingsIndex(
         spark, root, grams=want, id_col=id_col, text_col=text_col
     )

@@ -330,7 +330,7 @@ class PrefixIndex:
         # landing mid-admit fails the CAS loudly instead of merging
         # stale placements (r13 review)
         bases = {
-            t: t._current_version_dir() for t in (self._arrays, self._prefix)
+            t: t.snapshot().version_dir for t in (self._arrays, self._prefix)
         }
         self._effective = None
         docs_arr = docs_arr.persist()
@@ -643,8 +643,8 @@ def shared_prefix_index(
     VALUE, so a regenerated corpus at the same path rebuilds AND rmtrees
     the superseded index (the shared_postings contract)."""
     import shutil
-    import tempfile
 
+    from affinity_spark.cache import temp_root
     from affinity_spark.operators.postings import _corpus_fingerprint
 
     key = (spark.sparkContext.applicationId, corpus_key, t_num, t_den)
@@ -657,7 +657,7 @@ def shared_prefix_index(
         del _SHARED[key]
         shutil.rmtree(idx.path, ignore_errors=True)
     idx = PrefixIndex(
-        spark, tempfile.mkdtemp(prefix="affinity_prefix_"),
+        spark, temp_root("affinity_prefix_"),
         id_col=id_col, t_num=t_num, t_den=t_den,
     )
     idx.build(docs_arr)

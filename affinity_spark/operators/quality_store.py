@@ -275,8 +275,10 @@ class QualityStore:
         DDStore.admit for the caveat."""
         # the signals table is the meta authority for admit state (it is
         # rewritten by every admit anyway); the model table keeps its
-        # build-time meta — the model itself is immutable across admits
-        meta = self._signals.commit_meta()
+        # build-time meta — the model itself is immutable across admits.
+        # One handle: the meta, the rows and the CAS base are one commit
+        snap = self._signals.snapshot()
+        meta = snap.meta
         applied = list(meta.get("q_applied") or [])
         if fence is not None and fence in applied:
             # the batch's signal commit landed; make sure the DERIVED
@@ -300,7 +302,7 @@ class QualityStore:
         lineage["h_sync"] = self._sync_token(lineage)
 
         delta = self._signals_delta(docs, self.model())
-        cur = self._signals.read()
+        cur = snap.df
         delta = delta.select(
             # snapshot-width cast: a delta at a different numeric width
             # would write mixed physical parquet types into one table
@@ -367,9 +369,8 @@ class QualityStore:
             .withColumn("gen", F.lit(new_gen))
         )
         out = new_rows if kept is None else kept.unionByName(new_rows)
-        base_version = self._signals._current_version_dir()
         self._signals.overwrite_partitions(
-            out, gens, expected_base=base_version, meta=lineage
+            out, gens, expected_base=snap.version_dir, meta=lineage
         )
 
         # histogram: add the batch's counts, subtract replaced docs' old
@@ -507,10 +508,9 @@ class QualityStore:
         """True when all four tables are committed AND share one lineage id
         (a torn build reads as absent so the caller self-heals)."""
         tables = [self._signals, self._model, self._hist, self._cutoffs]
-        if not all(t.exists() for t in tables):
-            return False
-        ids = {t.commit_meta().get("q_lineage") for t in tables}
-        return len(ids) <= 1
+        snaps = [t.snapshot() for t in tables]
+        ids = {s.meta.get("q_lineage") for s in snaps}
+        return all(s.version_dir for s in snaps) and len(ids) <= 1
 
     # --- reads --------------------------------------------------------------
 
@@ -610,8 +610,8 @@ def shared_quality(
     quality query pays the ONE scoring pass; every later query reads the
     committed tables."""
     import shutil
-    import tempfile
 
+    from affinity_spark.cache import temp_root
     from affinity_spark.operators.postings import _corpus_fingerprint
 
     key = (spark.sparkContext.applicationId, corpus_key)
@@ -623,7 +623,7 @@ def shared_quality(
             return store
         del _SHARED[key]
         shutil.rmtree(store.path, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="affinity_quality_")
+    root = temp_root("affinity_quality_")
     store = QualityStore(
         spark, root, id_col=id_col, text_col=text_col, lang_col=lang_col,
         per_lang=per_lang,

@@ -84,11 +84,11 @@ class HLLStore:
         days = [r[0] for r in delta.select("day").distinct().collect()]
         if not days:
             return
-        if not self._table.exists():
+        snap = self._table.snapshot()
+        if snap.version_dir is None:
             self._table.overwrite(delta)
             return
-        base_version = self._table._current_version_dir()
-        cur = self._table.read().filter(F.col("day").isin(days))
+        cur = snap.df.filter(F.col("day").isin(days))
         merged = (
             cur.unionByName(delta.select(*cur.columns))
             .groupBy("day", "bucket")
@@ -96,7 +96,7 @@ class HLLStore:
             .select(*cur.columns)
         )
         self._table.overwrite_partitions(
-            merged, days, expected_base=base_version
+            merged, days, expected_base=snap.version_dir
         )
 
     def maintainer(self, key: Column, compact_every: int = 32):
@@ -235,11 +235,11 @@ class KMVStore:
         days = [r[0] for r in delta.select("day").distinct().collect()]
         if not days:
             return
-        if not self._table.exists():
+        snap = self._table.snapshot()
+        if snap.version_dir is None:
             self._table.overwrite(delta)
             return
-        base_version = self._table._current_version_dir()
-        cur = self._table.read().filter(F.col("day").isin(days))
+        cur = snap.df.filter(F.col("day").isin(days))
         w = Window.partitionBy("day").orderBy("h")
         merged = (
             cur.unionByName(delta.select(*cur.columns))
@@ -249,7 +249,7 @@ class KMVStore:
             .select(*cur.columns)
         )
         self._table.overwrite_partitions(
-            merged, days, expected_base=base_version
+            merged, days, expected_base=snap.version_dir
         )
 
     def maintainer(self, key: Column, compact_every: int = 32):

@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from affinity_spark.cache import track as _track_cache
+from affinity_spark.cache import temp_root, track as _track_cache
 from affinity_spark.operators import dedup as dd
 from affinity_spark.operators.graph import connected_components
 
@@ -918,8 +918,6 @@ def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, cluster_id, is_canonical), cluster_id = min member
     id."""
     import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from affinity_spark.operators.cluster_store import ClusterStore
@@ -933,7 +931,7 @@ def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is None or cached[0] != fp or not cached[2].exists():
         if cached is not None:
             shutil.rmtree(cached[1], ignore_errors=True)
-        base = tempfile.mkdtemp(prefix="affinity_csr_")
+        base = temp_root("affinity_csr_")
         pfx = PrefixIndex(spark, os.path.join(base, "pfx"))
         cs = ClusterStore(spark, os.path.join(base, "cs"))
         batched = docs.withColumn(

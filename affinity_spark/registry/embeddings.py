@@ -1826,10 +1826,10 @@ def emb_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     its continuous-ingest twin. Output: (vec_id, cluster_id,
     is_canonical), cluster label = min member id."""
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
+    from affinity_spark.cache import temp_root
     from affinity_spark.operators.cluster_store import ClusterStore
     from affinity_spark.operators.ivf import assign
     from affinity_spark.operators.ivf_index import IVFIndex
@@ -1845,7 +1845,7 @@ def emb_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(cached[1], ignore_errors=True)
         import os
 
-        base = tempfile.mkdtemp(prefix="affinity_eic_")
+        base = temp_root("affinity_eic_")
         seeds = [
             [float(x) for x in r.embedding]
             for r in emb.orderBy("vec_id").limit(8).collect()

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from affinity_spark import TimeRange
-from affinity_spark.cache import track as _track_cache
+from affinity_spark.cache import temp_root, track as _track_cache
 from affinity_spark.operators.asof import asof_join
 from affinity_spark.operators.upsert import merge_upsert
 from affinity_spark.operators.graph import connected_components
@@ -1803,8 +1803,6 @@ def events_hll_range_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events are never rescanned. Output is the exact integer
     estimator state (register sum + harmonic numerator), so the hash
     covers everything the float HLL formula consumes."""
-    import tempfile
-
     from affinity_spark.operators.postings import _corpus_fingerprint
     from affinity_spark.operators.sketch_store import HLLStore
 
@@ -1817,7 +1815,7 @@ def events_hll_range_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             import shutil
 
             shutil.rmtree(cached[1].path, ignore_errors=True)
-        st = HLLStore(spark, tempfile.mkdtemp(prefix="affinity_hll_"))
+        st = HLLStore(spark, temp_root("affinity_hll_"))
         st.build(ev, F.col("user_id").cast("string"))
         _HLL_STORES[key] = (fp, st)
     st = _HLL_STORES[key][1]
@@ -1863,8 +1861,6 @@ def events_kmv_range_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging is EXACT vs raw-range sketching (every range-k-min hash is
     within its own day's k smallest), so the oracle replays straight
     from raw events."""
-    import tempfile
-
     from affinity_spark.operators.postings import _corpus_fingerprint
     from affinity_spark.operators.sketch_store import KMVStore
 
@@ -1880,7 +1876,7 @@ def events_kmv_range_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             import shutil
 
             shutil.rmtree(cached[1].path, ignore_errors=True)
-        st = KMVStore(spark, tempfile.mkdtemp(prefix="affinity_kmv_"))
+        st = KMVStore(spark, temp_root("affinity_kmv_"))
         st.build(ev, F.col("user_id").cast("string"))
         _KMV_STORES[key] = (fp, st)
     st = _KMV_STORES[key][1]
@@ -1953,8 +1949,6 @@ def events_dd_range_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store's maintainer carries the run-scoped applied-batch fence
     (tests/test_dd_store.py pins the contrast with HLL's free max
     idempotence). Values in cents; all integer arithmetic."""
-    import tempfile
-
     from affinity_spark.operators.dd_store import DDStore
     from affinity_spark.operators.postings import _corpus_fingerprint
 
@@ -1971,7 +1965,7 @@ def events_dd_range_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             shutil.rmtree(cached[1].path, ignore_errors=True)
         st = DDStore(
-            spark, tempfile.mkdtemp(prefix="affinity_dd_"), value_col="cents"
+            spark, temp_root("affinity_dd_"), value_col="cents"
         )
         st.build(ev)
         _DD_STORES[key] = (fp, st)

@@ -366,10 +366,10 @@ def docs_media_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
     bucketing bug that drops a true pair hash-fails). Output:
     (modality, id_a, id_b, hamming)."""
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
+    from affinity_spark.cache import temp_root
     from affinity_spark.operators.media_index import (
         MediaIndex,
         hamming_pairs_multimodal,
@@ -384,7 +384,7 @@ def docs_media_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
     if cached is None or cached[0] != cfp or not cached[2].exists():
         if cached is not None:
             shutil.rmtree(cached[1], ignore_errors=True)
-        base = tempfile.mkdtemp(prefix="affinity_media_")
+        base = temp_root("affinity_media_")
         idx = MediaIndex(spark, os.path.join(base, "ix"))
         pairs_tbl = KeyedTable(
             spark, os.path.join(base, "pairs"),

@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from affinity_spark.cache import track as _track_cache
+from affinity_spark.cache import temp_root, track as _track_cache
 from affinity_spark.functions.text import doc_fingerprint, token_count
 from affinity_spark.operators import dedup as dd
 
@@ -308,8 +308,6 @@ def pipeline_store_served_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the oracle's SQL replay of the full ingest.
     """
     import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from affinity_spark.operators.bandindex import BandIndex
@@ -325,7 +323,7 @@ def pipeline_store_served_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is None or cached[0] != fp or not cached[2].exists():
         if cached is not None:
             shutil.rmtree(cached[1], ignore_errors=True)
-        base = tempfile.mkdtemp(prefix="affinity_ssr_")
+        base = temp_root("affinity_ssr_")
         qstore = QualityStore(spark, os.path.join(base, "quality"))
         bidx = BandIndex(
             spark, os.path.join(base, "bands"), num_buckets=2, doc_buckets=2

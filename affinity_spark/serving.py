@@ -19,10 +19,11 @@ Serving contract notes:
   DataFrame-shaped via the underlying operators.
 - A table-backed gateway answers reads from an in-memory Arrow copy of the
   CURRENT snapshot — the reference's memstore, bootstrapped from the log
-  and kept current (``KVStoreLocal`` boot/tail). The copy is loaded with
-  one ``KeyedTable.read().toArrow()`` the first time a version is served
-  and memoized by its version dir (snapshot dirs are immutable); only the
-  latest version is kept. Key equality and the time range are then
+  and kept current (``KVStoreLocal`` boot/tail). Each request takes one
+  ``KeyedTable.snapshot()`` handle; the first request that sees a version
+  loads the copy with one ``toArrow()`` of that handle's rows, memoized by
+  its version dir (snapshot dirs are immutable); only the latest version
+  is kept. Key equality and the time range are then
   ``pyarrow.compute`` masks with the Spark predicates' semantics (NULLs
   never match, ``NaN`` matches ``NaN``), and rows convert the way
   ``collect()`` returns them.
@@ -235,7 +236,7 @@ class TableSubscription:
         self._buffer: deque = deque()
         self._lock = threading.Lock()
         self._stop = threading.Event()
-        self._last = self._tbl._current_version_dir()
+        self._last = self._tbl.snapshot().version_dir
         rows = gateway.point_get(key)
         self._state = {self._key_of(r): r for r in rows}
         if include_initial:
@@ -257,7 +258,7 @@ class TableSubscription:
             self._stop.wait(poll_s)
 
     def _poll_once(self) -> None:
-        cur = self._tbl._current_version_dir()
+        cur = self._tbl.snapshot().version_dir
         if cur != self._last:
             events = self._diff(self._gw.point_get(self._key))
             with self._lock:
@@ -349,44 +350,35 @@ class ServingGateway:
         the lock, by the first request that sees it."""
         if self._table is None:
             return None
-        tbl = self._table
         snap = self._snap
-        if snap is not None and snap[0] == tbl._current_version_dir():
+        if snap is not None and snap[0] == self._table.snapshot().version_dir:
             return snap[1]
         with self._snap_lock:
+            handle = self._table.snapshot()
             snap = self._snap
-            if snap is None or snap[0] != tbl._current_version_dir():
-                snap = self._snap = self._load_snapshot()
+            if snap is None or snap[0] != handle.version_dir:
+                snap = self._snap = (handle.version_dir, self._load_snapshot(handle))
             return snap[1]
 
-    def _load_snapshot(self) -> tuple[str | None, tuple | None]:
-        """(version dir, its rows) for the current version; the rows are
-        None when the version is not held in memory. Retried when a commit
-        lands mid-load, so the rows always belong to the dir they are keyed
-        by."""
-        tbl = self._table
+    def _load_snapshot(self, handle) -> tuple | None:
+        """``handle``'s rows, or None when they are not held in memory: no
+        committed version, over ``SNAPSHOT_MAX_BYTES``, or a failed load.
+        A failure (e.g. over spark.driver.maxResultSize, or the version's
+        files reclaimed by later commits) is not retried for this version:
+        its reads run the Spark plan until the next commit."""
+        if handle.version_dir is None:
+            return None
         # binary cells as collect() returns them under this conf
-        as_bytes = tbl.spark.conf.get(
+        as_bytes = self._table.spark.conf.get(
             "spark.sql.execution.pyspark.binaryAsBytes", "true"
         ).lower() == "true"
-        while True:
-            vdir = tbl._current_version_dir()
-            data = None
-            try:
-                if (
-                    vdir is not None
-                    and tbl.file_stats()["total_bytes"] <= SNAPSHOT_MAX_BYTES
-                ):
-                    df = tbl.read()
-                    data = (df.toArrow().combine_chunks(), df.schema, as_bytes)
-            except Exception:
-                # files reclaimed by a later commit: the loop loads that
-                # one. Any other failure (e.g. over spark.driver.
-                # maxResultSize) is not retried for this version: its reads
-                # run the Spark plan until the next commit
-                data = None
-            if tbl._current_version_dir() == vdir:
-                return vdir, data
+        try:
+            if sum(handle.files.values()) > SNAPSHOT_MAX_BYTES:
+                return None
+            df = handle.df
+            return df.toArrow().combine_chunks(), df.schema, as_bytes
+        except Exception:
+            return None
 
     def _snapshot_rows(
         self, key: Mapping[str, object], time_range: TimeRange | None = None
@@ -444,38 +436,36 @@ class ServingGateway:
             raise ValueError("writes need a table-backed gateway (table=)")
         return self._table
 
-    def _rows_df(self, rows: list[Mapping[str, object]]) -> DataFrame:
+    def _rows_df(self, rows: list[Mapping[str, object]], snap) -> DataFrame:
         """Rows (parsed JSON dicts) -> a DataFrame in the SNAPSHOT's exact
         schema: from_json coerces JSON numerics/strings to the committed
         column types, so a wire write can never introduce the mixed
         numeric-width parquet poisoning (the r5 BandIndex rule)."""
         import json as _json
 
-        tbl = self._require_table()
         try:
-            schema = tbl.read().schema
+            schema = snap.df.schema
         except FileNotFoundError:
             if self._schema is None:
                 raise
             schema = self._schema  # first write defines the table
-        spark = tbl.spark
+        spark = snap.table.spark
         raw = local_df(
             spark, [(_json.dumps(dict(r), default=str),) for r in rows], "j string"
         )
         return raw.select(F.from_json("j", schema).alias("s")).select("s.*")
 
-    def _validate_keys(self, rows: list[Mapping[str, object]]) -> None:
+    def _validate_keys(self, rows: list[Mapping[str, object]], snap) -> None:
         """Key columns must be present, non-null and type-compatible in
         EVERY row BEFORE the frame is built: from_json coerces by
         nulling mismatches, so a typo'd key value would otherwise write a
         silent NULL-keyed row instead of answering 400."""
         from pyspark.sql import types as T
 
-        tbl = self._require_table()
         schema = self._schema
         if schema is None:
             try:
-                schema = tbl.read().schema
+                schema = snap.df.schema
             except FileNotFoundError:
                 schema = None
         ok_types = {
@@ -485,7 +475,7 @@ class ServingGateway:
         }
         fields = {f.name: type(f.dataType) for f in schema.fields} if schema else {}
         for r in rows:
-            for c in tbl.key_cols:
+            for c in snap.table.key_cols:
                 v = r.get(c)
                 if v is None:
                     raise ValueError(f"missing or null key column {c!r} in row")
@@ -502,29 +492,31 @@ class ServingGateway:
 
     def upsert(self, rows: list[Mapping[str, object]]) -> dict:
         """POST /{table}: W1 blind replace / W2 merge — last-write-wins by
-        (key, event-time) through the KeyedTable CAS merge."""
-        self._validate_keys(rows)
-        self._require_table().upsert(self._rows_df(rows))
+        (key, event-time) through the KeyedTable CAS merge. The handle
+        only types the rows: the merge captures its own base, so a commit
+        landing in between is folded in (last write wins), not refused."""
+        tbl = self._require_table()
+        snap = tbl.snapshot()
+        self._validate_keys(rows, snap)
+        tbl.upsert(self._rows_df(rows, snap))
         return {"upserted": len(rows)}
 
     def insert(self, rows: list[Mapping[str, object]]) -> dict:
         """POST /{table}?op=insert: W3 insert-only — keys already present
         are left untouched (anti-join), fresh keys merge in."""
         tbl = self._require_table()
-        self._validate_keys(rows)
-        df = self._rows_df(rows)
-        # capture the base BEFORE the anti-join and CAS the merge to it
-        # (as delete() does): an external writer committing the same key
-        # between the existing-keys read and the merge must raise
-        # ConcurrentWriteError, not be silently overwritten — insert-only
-        # semantics hold outside the HTTP write_lock too (r13 ADVICE)
-        base_version = tbl._current_version_dir()
+        # one handle types the rows, feeds the anti-join and is the base the
+        # merge CASes to (as delete() does): an external writer committing
+        # the same key in between must raise ConcurrentWriteError, not be
+        # silently overwritten — insert-only semantics hold outside the
+        # HTTP write_lock too (r13 ADVICE)
+        snap = tbl.snapshot()
+        self._validate_keys(rows, snap)
+        df = self._rows_df(rows, snap)
         existing = (
             None  # first write defines the table: all rows fresh
-            if base_version is None
-            else tbl.spark.read.parquet(base_version)
-            .select(*tbl.key_cols)
-            .distinct()
+            if snap.version_dir is None
+            else snap.df.select(*tbl.key_cols).distinct()
         )
         fresh = (
             df
@@ -533,7 +525,7 @@ class ServingGateway:
         )
         n = fresh.count()
         if n:
-            tbl.upsert(fresh, expected_base=base_version)
+            tbl.upsert(fresh, expected_base=snap.version_dir)
         return {"inserted": n, "skipped": len(rows) - n}
 
     def delete(self, key: Mapping[str, object]) -> dict:
@@ -541,8 +533,8 @@ class ServingGateway:
         (which may be a prefix of the full key) is dropped; the CAS commit
         keeps concurrent writers loud."""
         tbl = self._require_table()
-        base_version = tbl._current_version_dir()
-        cur = tbl.read()
+        snap = tbl.snapshot()
+        cur = snap.df
         cond = None
         for col, val in key.items():
             c = F.col(col).eqNullSafe(F.lit(val))
@@ -551,7 +543,7 @@ class ServingGateway:
             raise ValueError("delete needs at least one key column")
         n = cur.filter(cond).count()
         if n:
-            tbl.overwrite(cur.filter(~cond), expected_base=base_version)
+            tbl.overwrite(cur.filter(~cond), expected_base=snap.version_dir)
         return {"deleted": n}
 
     def subscribe(

@@ -21,16 +21,23 @@ readers without a table format dependency:
 - the last ``retain_versions`` snapshots stay on disk so a lazy DataFrame
   over the previous version keeps reading during and after the next commit;
   ``vacuum_versions`` reclaims older ones.
+
+Only this module knows how a version is laid out and read: other code
+reads one through the :class:`Snapshot` handle ``KeyedTable.snapshot()``
+returns (``read()``, ``commit_meta()``, ``exists()`` are views of it).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
 import uuid
 from collections.abc import Mapping, Sequence
+from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +50,41 @@ from affinity_spark.timerange import TimeRange
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed since this write's base snapshot was read
     (or holds the commit lock): retry from the new current version."""
+
+
+def _parquet_files(vdir: str) -> dict[str, int]:
+    """The parquet files under a version dir, partition dirs included, as
+    sorted paths relative to it -> byte sizes."""
+    paths = sorted(glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True))
+    return {os.path.relpath(p, vdir): os.path.getsize(p) for p in paths}
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One committed version of a :class:`KeyedTable`: ``version_dir`` (the
+    CAS token a write's ``expected_base`` takes; ``None`` before the first
+    commit), its ``meta``, and, built on first use, its rows ``df`` and
+    parquet ``files`` (both raise ``FileNotFoundError`` when nothing is
+    committed). Version dirs are immutable, so a handle keeps describing
+    its commit after later ones land, until retention reclaims the dir."""
+
+    table: KeyedTable = field(repr=False, compare=False)
+    version_dir: str | None
+    meta: dict = field(default_factory=dict, compare=False)
+
+    def _dir(self) -> str:
+        if self.version_dir is None:
+            raise FileNotFoundError(f"no committed version at {self.table.path}")
+        return self.version_dir
+
+    @cached_property
+    def df(self) -> DataFrame:
+        return self.table._read_dir(self._dir())
+
+    @cached_property
+    def files(self) -> dict[str, int]:
+        """Parquet files (paths relative to ``version_dir``) -> bytes."""
+        return _parquet_files(self._dir())
 
 
 class KeyedTable:
@@ -90,6 +132,8 @@ class KeyedTable:
         # reference's external/readonly state rejects writes,
         # KVStoreLocalSpec.scala:58)
         self.external = external
+        # (version dir, its schema): see _read_dir
+        self._schema_memo = None
         os.makedirs(path, exist_ok=True)
 
     # --- snapshot pointer ---------------------------------------------------
@@ -98,11 +142,21 @@ class KeyedTable:
     def _pointer(self) -> str:
         return os.path.join(self.path, "_current.json")
 
+    def snapshot(self) -> Snapshot:
+        """The current committed version as one immutable handle: the only
+        place the pointer file is opened, so its version dir, metadata and
+        rows cannot name two different commits."""
+        try:
+            with open(self._pointer) as f:
+                ptr = json.load(f)
+        except FileNotFoundError:
+            return Snapshot(self, None)
+        return Snapshot(
+            self, os.path.join(self.path, ptr["version"]), ptr.get("meta") or {}
+        )
+
     def _current_version_dir(self) -> str | None:
-        if not os.path.exists(self._pointer):
-            return None
-        with open(self._pointer) as f:
-            return os.path.join(self.path, json.load(f)["version"])
+        return self.snapshot().version_dir
 
     @property
     def _lock(self) -> str:
@@ -148,10 +202,7 @@ class KeyedTable:
     def commit_meta(self) -> dict:
         """Application metadata recorded with the current commit (e.g. the
         last applied streaming batch id); ``{}`` before any commit."""
-        if not os.path.exists(self._pointer):
-            return {}
-        with open(self._pointer) as f:
-            return json.load(f).get("meta") or {}
+        return self.snapshot().meta
 
     def _commit_version(
         self, version: str, expected_base: str | None, meta: dict | None = None
@@ -199,23 +250,26 @@ class KeyedTable:
     # --- io -------------------------------------------------------------
 
     def exists(self) -> bool:
-        return self._current_version_dir() is not None
+        return self.snapshot().version_dir is not None
 
     def read(self) -> DataFrame:
-        vdir = self._current_version_dir()
-        if vdir is None:
-            raise FileNotFoundError(f"table at {self.path} has no committed version")
-        # memoize the snapshot schema per version dir: without it every
-        # read() launches a distributed footer/partition-inference job
-        # over the snapshot's files (~160 ms per scan of a 128-dir table
-        # locally; at cluster scale a real job over thousands of footers).
-        # Snapshot dirs are immutable, so the memo can never go stale;
-        # only the latest version is kept (older dirs get reclaimed).
-        cached = getattr(self, "_schema_memo", None)
-        if cached is None or cached[0] != vdir:
-            cached = (vdir, self.spark.read.parquet(vdir).schema)
-            self._schema_memo = cached
-        return self.spark.read.schema(cached[1]).parquet(vdir)
+        return self.snapshot().df
+
+    def _read_dir(self, vdir: str, files: Sequence[str] = ()) -> DataFrame:
+        """The one way a version dir (or some of its ``files``) is read, with
+        its schema memoized: without the memo every read runs a footer-
+        inference Spark job (~160 ms per scan of a 128-dir table locally).
+        Version dirs are immutable, so the memo never goes stale; only the
+        latest dir read is kept."""
+        memo = self._schema_memo
+        if memo is None or memo[0] != vdir:
+            memo = self._schema_memo = (vdir, self.spark.read.parquet(vdir).schema)
+        reader = self.spark.read.schema(memo[1])
+        if not files:
+            return reader.parquet(vdir)
+        return reader.option("basePath", vdir).parquet(
+            *(os.path.join(vdir, f) for f in files)
+        )
 
     def versions(self) -> list[str]:
         """Retained snapshot version names, oldest first (bounded by the
@@ -237,7 +291,7 @@ class KeyedTable:
                 f"version {version!r} not retained at {self.path}; "
                 f"available: {self.versions()}"
             )
-        return self.spark.read.parquet(vdir)
+        return self._read_dir(vdir)
 
     def overwrite(
         self,
@@ -256,23 +310,31 @@ class KeyedTable:
         previous commit's metadata forward so maintenance writes (compact,
         vacuum) don't erase replay markers.
         """
-        if self.external:
-            raise PermissionError(f"table at {self.path} is external/read-only")
         if expected_base == "UNSET":
             expected_base = self._current_version_dir()
+        self._commit(lambda out: self._write_snapshot(df, out), expected_base, meta)
+
+    def _commit(self, write, expected_base: str | None, meta: dict | None) -> None:
+        """The one commit path: name a new version, ``write(out)`` its
+        files, CAS the pointer from ``expected_base`` to it (a loser's
+        files are removed), then reclaim versions past retention."""
+        if self.external:
+            raise PermissionError(f"table at {self.path} is external/read-only")
         if meta is None:
             meta = self.commit_meta()
         version = f"v{int(time.time() * 1000):016d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, version)
-        self._write_snapshot(df, out)
+        write(out)
         try:
             self._commit_version(version, expected_base, meta)
         except ConcurrentWriteError:
             shutil.rmtree(out, ignore_errors=True)  # orphaned loser snapshot
             raise
-        self._reclaim_versions()
+        self.vacuum_versions(self.retain_versions)
 
-    def _write_snapshot(self, df: DataFrame, out: str) -> None:
+    def _write_snapshot(
+        self, df: DataFrame, out: str, n_files: int | None = None
+    ) -> None:
         if self.single_file_partitions:
             # one file per partition dir: shuffle BY the partition column
             # (several dirs per task is fine — a task emits one file per
@@ -289,7 +351,9 @@ class KeyedTable:
         # with a partition column the key clustering holds WITHIN each
         # partition dir (each write task emits one file per partition it
         # holds, and each file spans one task's key range)
-        w = df.repartition(self.num_buckets, *self.key_cols).write.mode("overwrite")
+        w = df.repartition(
+            n_files or self.num_buckets, *self.key_cols
+        ).write.mode("overwrite")
         if self.partition_col:
             w = w.partitionBy(self.partition_col)
         w.parquet(out)
@@ -310,8 +374,6 @@ class KeyedTable:
         (a racing writer loses loudly); version reclamation only unlinks
         names, so inodes shared across retained snapshots survive it.
         """
-        if self.external:
-            raise PermissionError(f"table at {self.path} is external/read-only")
         if not self.partition_col:
             raise ValueError("overwrite_partitions requires partition_col")
         if expected_base == "UNSET":
@@ -320,55 +382,36 @@ class KeyedTable:
             # nothing to carry over - identical to a first full write
             self.overwrite(delta, expected_base=None, meta=meta)
             return
-        if meta is None:
-            meta = self.commit_meta()
-        version = f"v{int(time.time() * 1000):016d}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.path, version)
-        self._write_snapshot(delta, out)
         # hive dir names use the string form of the value (Spark's own
         # encoding for int/string partition values)
         touched_dirs = {f"{self.partition_col}={v}" for v in touched}
         prefix = f"{self.partition_col}="
-        for entry in os.listdir(expected_base):
-            src = os.path.join(expected_base, entry)
-            if not (entry.startswith(prefix) and os.path.isdir(src)):
-                continue
-            if entry in touched_dirs:
-                continue  # the delta write is this partition's new truth
-            dst = os.path.join(out, entry)
-            os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(src):
-                if fname.endswith(".parquet"):
-                    os.link(os.path.join(src, fname), os.path.join(dst, fname))
-        try:
-            self._commit_version(version, expected_base, meta)
-        except ConcurrentWriteError:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        self._reclaim_versions()
 
-    def _reclaim_versions(self) -> None:
-        """Drop all but the newest ``retain_versions`` snapshots (never the
-        current one) — snapshot-isolated readers of the previous version
-        keep their files through the next commit."""
-        current = self._current_version_dir()
-        dirs = [d for d in self._version_dirs() if d != current]
-        dirs.sort(key=os.path.getmtime)
-        excess = len(dirs) - (self.retain_versions - 1)
-        for d in dirs[:excess] if excess > 0 else []:
-            shutil.rmtree(d, ignore_errors=True)
+        def write(out: str) -> None:
+            self._write_snapshot(delta, out)
+            for entry in os.listdir(expected_base):
+                src = os.path.join(expected_base, entry)
+                if not (entry.startswith(prefix) and os.path.isdir(src)):
+                    continue
+                if entry in touched_dirs:
+                    continue  # the delta write is this partition's new truth
+                dst = os.path.join(out, entry)
+                os.makedirs(dst, exist_ok=True)
+                for fname in os.listdir(src):
+                    if fname.endswith(".parquet"):
+                        os.link(os.path.join(src, fname), os.path.join(dst, fname))
+
+        self._commit(write, expected_base, meta)
 
     def vacuum_versions(self, keep: int = 1) -> int:
-        """Explicit reclamation to ``keep`` snapshots; returns dirs removed."""
+        """Reclaim to ``keep`` snapshots (never the current one; every commit
+        keeps ``retain_versions``); returns dirs removed."""
         current = self._current_version_dir()
         dirs = [d for d in self._version_dirs() if d != current]
-        dirs.sort(key=os.path.getmtime)
-        excess = len(dirs) - (keep - 1)
-        removed = 0
-        for d in dirs[:excess] if excess > 0 else []:
+        stale = sorted(dirs, key=os.path.getmtime)[: max(0, len(dirs) - keep + 1)]
+        for d in stale:
             shutil.rmtree(d, ignore_errors=True)
-            removed += 1
-        return removed
+        return len(stale)
 
     _UNSET = object()
 
@@ -386,22 +429,19 @@ class KeyedTable:
         the version dir (or ``None`` for a first write); leave unset to
         capture the current pointer here.
         """
-        base_version = (
-            self._current_version_dir()
-            if expected_base is KeyedTable._UNSET
-            else expected_base
+        if expected_base is KeyedTable._UNSET:
+            expected_base = self._current_version_dir()
+        base = (
+            updates.limit(0) if expected_base is None else self._read_dir(expected_base)
         )
-        if base_version is None:
-            merged = merge_upsert(
-                updates.limit(0), updates, self.key_cols, self.ts_col,
-                self.tiebreak_cols, self.tombstone_col,
-            )
-        else:
-            merged = merge_upsert(
-                self.spark.read.parquet(base_version), updates, self.key_cols,
-                self.ts_col, self.tiebreak_cols, self.tombstone_col,
-            )
-        self.overwrite(merged, expected_base=base_version)
+        if self.tombstone_col and self.tombstone_col not in base.columns:
+            # the merge drops the tombstone column from what it commits
+            base = base.withColumn(self.tombstone_col, F.lit(False))
+        merged = merge_upsert(
+            base, updates, self.key_cols, self.ts_col,
+            self.tiebreak_cols, self.tombstone_col,
+        )
+        self.overwrite(merged, expected_base=expected_base)
 
     # --- reads ----------------------------------------------------------
 
@@ -496,24 +536,17 @@ class KeyedTable:
         if vdir is None or not os.path.isdir(vdir):
             raise FileNotFoundError(f"no snapshot dir to manifest at {self.path}")
         entries = []
-        for fname in sorted(os.listdir(vdir)):
-            if not fname.endswith(".parquet"):
-                continue
+        for fname in _parquet_files(vdir):
             meta = pq.ParquetFile(os.path.join(vdir, fname)).metadata
             cols: dict[str, list] = {}
             for rg in range(meta.num_row_groups):
                 group = meta.row_group(rg)
-                for ci in range(group.num_columns):
-                    col = group.column(ci)
-                    st = col.statistics
-                    name = col.path_in_schema
+                for col in map(group.column, range(group.num_columns)):
+                    st, name = col.statistics, col.path_in_schema
                     if st is None or not st.has_min_max or name not in self.key_cols:
                         continue
-                    lo, hi = st.min, st.max
-                    if name in cols:
-                        cols[name] = [min(cols[name][0], lo), max(cols[name][1], hi)]
-                    else:
-                        cols[name] = [lo, hi]
+                    lo, hi = cols.get(name, (st.min, st.max))
+                    cols[name] = [min(lo, st.min), max(hi, st.max)]
             entries.append({"file": fname, "rows": meta.num_rows, "stats": cols})
         manifest = {"version": os.path.basename(vdir), "files": entries}
         with open(os.path.join(vdir, "_manifest.json"), "w") as f:
@@ -525,44 +558,36 @@ class KeyedTable:
         envelope can contain the key (falls back to the full snapshot when
         no manifest exists). Same result as ``get``/``scan`` — the manifest
         is a pure physical optimization, which the pruning test asserts."""
-        vdir = self._current_version_dir()
-        if vdir is None:
-            raise FileNotFoundError(f"table at {self.path} has no committed version")
-        mpath = os.path.join(vdir, "_manifest.json")
+        snap = self.snapshot()
+        full = snap.df  # raises when nothing is committed
+        mpath = os.path.join(snap.version_dir, "_manifest.json")
         if not os.path.exists(mpath):
-            return point_get(self.spark.read.parquet(vdir), key)
+            return point_get(full, key)
         with open(mpath) as f:
             manifest = json.load(f)
-        keep = []
-        for entry in manifest["files"]:
-            ok = True
-            for col, val in key.items():
-                if col in entry["stats"]:
-                    lo, hi = entry["stats"][col]
-                    if not (lo <= val <= hi):
-                        ok = False
-                        break
-            if ok:
-                keep.append(os.path.join(vdir, entry["file"]))
+        keep = [
+            e["file"]
+            for e in manifest["files"]
+            if all(
+                c not in e["stats"] or e["stats"][c][0] <= v <= e["stats"][c][1]
+                for c, v in key.items()
+            )
+        ]
         if not keep:
-            return point_get(self.spark.read.parquet(vdir), key).limit(0)
-        return point_get(self.spark.read.parquet(*keep), key)
+            return point_get(full, key).limit(0)
+        return point_get(self._read_dir(snap.version_dir, keep), key)
 
     def file_stats(self) -> dict:
         """Physical layout of the current snapshot: file count + byte sizes.
         The signal a table-maintenance scheduler watches for the small-file
         problem."""
-        vdir = self._current_version_dir()
-        if vdir is None:
-            raise FileNotFoundError(f"table at {self.path} has no committed version")
-        sizes = [
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(vdir)
-            for f in files
-            if f.endswith(".parquet")
-        ]
+        return self._file_stats(self.snapshot())
+
+    @staticmethod
+    def _file_stats(snap: Snapshot) -> dict:
+        sizes = snap.files.values()
         return {
-            "version": os.path.basename(vdir),
+            "version": os.path.basename(snap.version_dir),
             "n_files": len(sizes),
             "total_bytes": sum(sizes),
             "max_file_bytes": max(sizes, default=0),
@@ -586,35 +611,22 @@ class KeyedTable:
         """
         if self.external:
             raise PermissionError(f"table at {self.path} is external/read-only")
-        base_version = self._current_version_dir()
-        stats = self.file_stats()
-        if self.single_file_partitions:
-            # layout is already one file per partition dir, and admits
-            # REPLACE whole dirs (overwrite_partitions) — there is no
-            # small-file decay to repair, and a rewrite here would churn a
-            # new version per maintainer tick for nothing
-            return {**stats, "compacted": False, "n_files_after": stats["n_files"]}
+        snap = self.snapshot()
+        stats = self._file_stats(snap)
         n_target = max(1, -(-stats["total_bytes"] // max(1, target_file_bytes)))
-        if stats["n_files"] <= n_target:
+        # a single-file-partition layout is already one file per partition
+        # dir, and admits REPLACE whole dirs (overwrite_partitions) — there
+        # is no small-file decay to repair, and a rewrite here would churn
+        # a new version per maintainer tick for nothing
+        if self.single_file_partitions or stats["n_files"] <= n_target:
             return {**stats, "compacted": False, "n_files_after": stats["n_files"]}
-        df = self.spark.read.parquet(base_version)
-        version = f"v{int(time.time() * 1000):016d}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.path, version)
-        w = df.repartition(n_target, *self.key_cols).write.mode("overwrite")
-        if self.partition_col:
-            w = w.partitionBy(self.partition_col)
-        w.parquet(out)
-        try:
-            self._commit_version(version, base_version, self.commit_meta())
-        except ConcurrentWriteError:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        self._reclaim_versions()
-        return {
-            **stats,
-            "compacted": True,
-            "n_files_after": self.file_stats()["n_files"],
-        }
+        self._commit(
+            lambda out: self._write_snapshot(snap.df, out, n_target),
+            snap.version_dir,
+            snap.meta,
+        )
+        n_after = self.file_stats()["n_files"]
+        return {**stats, "compacted": True, "n_files_after": n_after}
 
     def vacuum(self, ttl_ms: int, now_ms: int, ts_unit: str = "millis") -> int:
         """Physically drop records older than ``now - ttl`` (the scheduled
@@ -623,9 +635,8 @@ class KeyedTable:
         vacuum). Returns the number of rows removed."""
         from affinity_spark.operators.kv import ttl_filter
 
-        base_version = self._current_version_dir()
-        before = self.read()
-        n_before = before.count()
-        kept = ttl_filter(before, self.ts_col, ttl_ms, now_ms, ts_unit)
-        self.overwrite(kept, expected_base=base_version)
+        snap = self.snapshot()
+        n_before = snap.df.count()
+        kept = ttl_filter(snap.df, self.ts_col, ttl_ms, now_ms, ts_unit)
+        self.overwrite(kept, expected_base=snap.version_dir)
         return n_before - self.read().count()

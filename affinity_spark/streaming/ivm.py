@@ -115,19 +115,19 @@ def incremental_agg_sink(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         tbl = KeyedTable(spark, table_path, list(key_cols), "")
-        meta = tbl.commit_meta()
+        snap = tbl.snapshot()
+        meta = snap.meta
         if (
             meta.get("ivm_run", run_id) == run_id
             and meta.get("ivm_batch_id") is not None
             and batch_id <= meta["ivm_batch_id"]
         ):
             return  # crash-replayed batch: its deltas are already committed
-        base_version = tbl._current_version_dir()
-        base = spark.read.parquet(base_version) if base_version is not None else None
+        base = snap.df if snap.version_dir is not None else None
         delta = batch_delta_agg(batch_df, key_cols, cents_col, op_col)
         tbl.overwrite(
             apply_agg_delta(base, delta, key_cols),
-            expected_base=base_version,
+            expected_base=snap.version_dir,
             meta={"ivm_run": run_id, "ivm_batch_id": batch_id},
         )
 

@@ -501,9 +501,10 @@ def retract_docs(
     if band_index.exists():
         band_index.admit(empty, deleted_ids=ids)
     for table in (corpus_store, survivors_table, rejected_table):
-        if table.exists():
-            kept = table.read().filter(~F.col(id_col).isin(ids))
-            table.overwrite(kept, expected_base=table._current_version_dir())
+        snap = table.snapshot()
+        if snap.version_dir is not None:
+            kept = snap.df.filter(~F.col(id_col).isin(ids))
+            table.overwrite(kept, expected_base=snap.version_dir)
 
 
 def corpus_pipeline_replay(

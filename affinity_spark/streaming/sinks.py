@@ -54,9 +54,9 @@ def foreach_batch_merge(
             spark, table_path, list(key_cols), ts_col, tiebreak_cols,
             tombstone_col=None,  # keep tombstones in the table; filter on read
         )
-        base_version = tbl._current_version_dir()
-        if base_version is not None:
-            base = spark.read.parquet(base_version)
+        snap = tbl.snapshot()
+        if snap.version_dir is not None:
+            base = snap.df
             if tombstone_col is not None and tombstone_col not in base.columns:
                 base = base.withColumn(tombstone_col, F.lit(False))
             merged = merge_upsert(
@@ -65,7 +65,7 @@ def foreach_batch_merge(
             )
         else:
             merged = batch_df
-        tbl.overwrite(merged, expected_base=base_version)
+        tbl.overwrite(merged, expected_base=snap.version_dir)
 
     return apply
 
