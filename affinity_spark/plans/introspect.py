@@ -12,6 +12,7 @@ broadcast join into a sort-merge join or strips pushdown fails CI — at
 
 from __future__ import annotations
 
+import bisect
 import re
 
 from pyspark.sql import DataFrame
@@ -31,18 +32,65 @@ def formatted_plan(df: DataFrame) -> str:
     return jdf.queryExecution().explainString(mode)
 
 
+def _drop_final_plans(text: str) -> str:
+    """``text`` without the ``== Final Plan ==`` section of each executed
+    adaptive plan (a frame the query already ran, such as a cached
+    result): that section records one execution — its stage order and
+    the shape AQE re-planned from the stages that finished first — so two
+    runs of one query differ there. The ``== Initial Plan ==`` is kept,
+    the detail blocks of nodes printed only in removed sections go too,
+    and the other node ids are renumbered as if those nodes had never
+    been numbered."""
+    tree, sep, details = text.partition("\n\n")
+    lines = tree.split("\n")
+    kept, dropped, end = [], [], None
+    for line in lines:
+        if end is not None:
+            if line.startswith(end):
+                end = None
+            else:
+                dropped.append(line)
+                continue
+        col = line.find("+- == Final Plan ==")
+        if col >= 0:
+            end = line[:col] + "+- == Initial Plan =="
+            continue
+        kept.append(line)
+    if len(kept) == len(lines):
+        return text
+
+    def ids(rows: list[str]) -> set[int]:
+        return {int(i) for i in re.findall(r"\((\d+)\)", "\n".join(rows))}
+
+    gone = sorted(ids(dropped) - ids(kept))
+    blocks = [
+        b for b in details.split("\n\n")
+        if not ((m := re.match(r"\((\d+)\) ", b)) and int(m.group(1)) in gone)
+    ]
+    return re.sub(
+        r"\((\d+)\)",
+        lambda m: f"({int(m.group(1)) - bisect.bisect(gone, int(m.group(1)))})",
+        "\n".join(kept) + sep + "\n\n".join(blocks),
+    )
+
+
 def normalize_plan(text: str) -> str:
     """Mask what differs between two processes in a plan string, so two
     dumps of the same plan diff clean: expression ids (``#141``), the
     lambda-variable suffix the JVM draws from one global counter
-    (``x_54``, ``acc_3``), exchange ``plan_id``s, and the scratch paths a
+    (``x_54``, ``acc_3``), exchange ``plan_id``s, RDD ids
+    (``MapPartitionsRDD[4957]``, drawn from a per-process counter that
+    every earlier job moves), the scratch paths a
     run creates (``mkdtemp`` roots such as ``affinity_ivf_k3xtd_08`` and
-    KeyedTable version dirs ``v<millis>-<hex8>``). Node ids (``(12)``)
-    are left alone — they are positional, and ``tools/plan_audit.py``
-    counts them."""
+    KeyedTable version dirs ``v<millis>-<hex8>``), and the final plans of
+    executed adaptive plans (``_drop_final_plans``). Other node ids
+    (``(12)``) are left alone — they are positional, and
+    ``tools/plan_audit.py`` counts them."""
+    text = _drop_final_plans(text)
     text = re.sub(r"#\d+", "#N", text)
     text = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1_N", text)
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
+    text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
     text = re.sub(r"\b(affinity_[a-z]+_)[a-z0-9_]{8}(?=/)", r"\1X", text)
     return re.sub(r"\bv\d{16}-[0-9a-f]{8}\b", "vN", text)
 

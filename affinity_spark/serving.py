@@ -19,21 +19,27 @@ Serving contract notes:
   DataFrame-shaped via the underlying operators.
 - A table-backed gateway answers reads from an in-memory Arrow copy of the
   CURRENT snapshot — the reference's memstore, bootstrapped from the log
-  and kept current (``KVStoreLocal`` boot/tail). Each request takes one
+  and then tailing it (``KVStoreLocal`` boot/tail). Each request takes one
   ``KeyedTable.snapshot()`` handle; the first request that sees a version
-  loads the copy with one ``toArrow()`` of that handle's rows, memoized by
-  its version dir (snapshot dirs are immutable); only the latest version
-  is kept. Key equality and the time range are then
-  ``pyarrow.compute`` masks with the Spark predicates' semantics (NULLs
-  never match, ``NaN`` matches ``NaN``), and rows convert the way
-  ``collect()`` returns them.
+  brings the copy up to it, once, under a lock. A version is a base plus
+  ordered deltas (see ``sources/keyed_table``), and a commit no longer
+  forces a reload: when the new version has the base the copy was built
+  from, only its new deltas' rows (read with pyarrow, no Spark job) are
+  folded in, last write wins by (ts, tiebreaks, delta ordinal) as the
+  Spark read of the version merges them. Only a new base (a merge, a
+  compaction, an ``overwrite``) is loaded with one ``toArrow()``, and a
+  cold load is that load followed by the same fold. Key equality and the
+  time range are then ``pyarrow.compute`` masks with the Spark
+  predicates' semantics (NULLs never match, ``NaN`` matches ``NaN``), and
+  rows convert the way ``collect()`` returns them.
 - Reads go back to the Spark plan (``kv.point_get``/``kv.prefix_scan``,
   one job per request) when the snapshot's parquet files total more than
   ``SNAPSHOT_MAX_BYTES`` (16 MiB), when loading the version failed (e.g.
   over ``spark.driver.maxResultSize``; not retried until the next
-  commit), or when a filter value would need Spark's type coercion to
-  compare with its column (e.g. a string against a timestamp). A
-  df-backed gateway always runs the Spark plan.
+  commit; also when an order column holds ``NaN``, which Arrow and Spark
+  order differently), or when a filter value would need Spark's type
+  coercion to compare with its column (e.g. a string against a
+  timestamp). A df-backed gateway always runs the Spark plan.
 - Read-your-writes: the version pointer is read on every request, so a
   read sent after a write's commit returned (a gateway POST's 200, or an
   external writer's ``upsert``/``changelog_sink`` commit) sees it; reads
@@ -53,13 +59,15 @@ import time
 from collections import deque
 from decimal import Decimal
 from functools import reduce
-from typing import Iterator, Mapping
+from typing import Iterator, Mapping, NamedTuple
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import StructType
 
 from affinity_spark.functions.lits import local_df
 from affinity_spark.operators.kv import point_get, prefix_scan
@@ -157,6 +165,54 @@ def _snapshot_mask(
             return None
         conds += tc
     return conds
+
+
+class _Memstore(NamedTuple):
+    """A version's rows held in memory: the Arrow table with its Spark
+    schema and binary form, and the base and deltas folded into it."""
+
+    rows: pa.Table
+    schema: StructType
+    as_bytes: bool
+    base: tuple[str, ...]
+    deltas: tuple[str, ...]
+
+
+def _fold(
+    table: pa.Table,
+    deltas: list[pa.Table],
+    key_cols: list[str],
+    order_cols: list[str],
+) -> pa.Table:
+    """``table`` with ``deltas`` (oldest first) folded in: per key, the
+    row with the greatest (order columns, ordinal) wins, the ordinal
+    being 0 for ``table``'s rows and i for the i-th delta's — the
+    ``compact_latest`` the Spark read of a version with deltas runs.
+    With no deltas ``table`` is returned as it is, as that read returns
+    the base alone. Raises where Arrow's order would not be Spark's (NaN
+    in an order column), so the version's reads run the Spark plan."""
+    if not deltas:
+        return table
+    ordinal, pos = "__ordinal", "__pos"
+    parts = [
+        t.select(table.column_names)
+        .cast(table.schema)
+        .append_column(ordinal, pa.array(np.full(t.num_rows, i, np.int64)))
+        for i, t in enumerate([table, *deltas])
+    ]
+    rows = pa.concat_tables(parts)
+    for c in order_cols:
+        if pa.types.is_floating(rows[c].type) and pc.any(pc.is_nan(rows[c])).as_py():
+            raise ValueError(f"NaN in order column {c!r}")
+    # Spark orders NULL below any value: last when descending
+    rows = rows.take(pc.sort_indices(
+        rows,
+        [(c, "descending") for c in [*order_cols, ordinal]],
+        null_placement="at_end",
+    ))
+    rows = rows.append_column(pos, pa.array(np.arange(rows.num_rows)))
+    first = rows.group_by(key_cols, use_threads=False).aggregate([(pos, "min")])
+    return rows.take(first[f"{pos}_min"]).drop_columns([ordinal, pos]).combine_chunks()
 
 
 def _same_row(a: Mapping[str, object], b: Mapping[str, object]) -> bool:
@@ -334,20 +390,20 @@ class ServingGateway:
         # gateway defines the physical schema, so it must come from a
         # declaration, not from reading the (absent) snapshot
         self._schema = schema
-        # (version dir, (arrow table, schema, binary as bytes) | None) of
-        # the latest snapshot served; None = not held in memory (oversize,
-        # a failed load, or no committed version): reads run Spark plans
+        # (version dir, _Memstore | None) of the latest snapshot served;
+        # None = not held in memory (oversize, a failed load, or no
+        # committed version): reads run Spark plans
         self._snap = None
         self._snap_lock = threading.Lock()
 
     def _frame(self) -> DataFrame:
         return self._df if self._table is None else self._table.read()
 
-    def _snapshot(self) -> tuple | None:
-        """The current version's rows in memory with their Spark schema
-        and binary form, or None when reads run the Spark plan. The
-        pointer is read on every call; a new version is loaded once, under
-        the lock, by the first request that sees it."""
+    def _snapshot(self) -> _Memstore | None:
+        """The current version's rows in memory, or None when reads run
+        the Spark plan. The pointer is read on every call; a new version
+        is brought in once, under the lock, by the first request that sees
+        it."""
         if self._table is None:
             return None
         snap = self._snap
@@ -357,26 +413,48 @@ class ServingGateway:
             handle = self._table.snapshot()
             snap = self._snap
             if snap is None or snap[0] != handle.version_dir:
-                snap = self._snap = (handle.version_dir, self._load_snapshot(handle))
+                held = None if snap is None else snap[1]
+                snap = self._snap = (handle.version_dir, self._load_snapshot(handle, held))
             return snap[1]
 
-    def _load_snapshot(self, handle) -> tuple | None:
+    def _load_snapshot(self, handle, held: _Memstore | None) -> _Memstore | None:
         """``handle``'s rows, or None when they are not held in memory: no
         committed version, over ``SNAPSHOT_MAX_BYTES``, or a failed load.
-        A failure (e.g. over spark.driver.maxResultSize, or the version's
-        files reclaimed by later commits) is not retried for this version:
-        its reads run the Spark plan until the next commit."""
+        When ``held`` has the same base and a prefix of the deltas, only
+        the new deltas are folded into its rows; otherwise the base is
+        loaded (one ``toArrow()``) and all the deltas folded. A failure
+        (e.g. over spark.driver.maxResultSize, or the version's files
+        reclaimed by later commits) is not retried for this version: its
+        reads run the Spark plan until the next commit."""
         if handle.version_dir is None:
             return None
+        tbl = self._table
         # binary cells as collect() returns them under this conf
-        as_bytes = self._table.spark.conf.get(
+        as_bytes = tbl.spark.conf.get(
             "spark.sql.execution.pyspark.binaryAsBytes", "true"
         ).lower() == "true"
         try:
             if sum(handle.files.values()) > SNAPSHOT_MAX_BYTES:
                 return None
-            df = handle.df
-            return df.toArrow().combine_chunks(), df.schema, as_bytes
+            if (
+                held is None
+                or held.base != handle.base
+                or handle.deltas[: len(held.deltas)] != held.deltas
+            ):
+                rows, folded = handle.base_df.toArrow().combine_chunks(), ()
+            else:
+                rows, folded = held.rows, held.deltas
+            rows = _fold(
+                rows,
+                handle.delta_tables(len(folded)),
+                tbl.key_cols,
+                [tbl.ts_col, *tbl.tiebreak_cols],
+            )
+            schema = handle.schema
+            return _Memstore(
+                rows.select(schema.fieldNames()), schema, as_bytes,
+                handle.base, handle.deltas,
+            )
         except Exception:
             return None
 
@@ -385,17 +463,17 @@ class ServingGateway:
     ) -> list[Row] | None:
         """The rows of the in-memory snapshot matching the key (and time
         range), as ``collect()`` returns them; None = run the Spark plan."""
-        snap = self._snapshot()
-        if snap is None:
+        held = self._snapshot()
+        if held is None:
             return None
-        table, schema, as_bytes = snap
+        table = held.rows
         conds = _snapshot_mask(table, key, time_range, self._ts_col, self._ts_unit)
         if conds is None:
             return None
         if conds:
             table = table.filter(reduce(pc.and_, conds))
         return ArrowTableToRowsConversion.convert(
-            table, schema, binary_as_bytes=as_bytes
+            table, held.schema, binary_as_bytes=held.as_bytes
         )
 
     # -- request handlers (what an HTTP route would call) -------------------
@@ -444,7 +522,7 @@ class ServingGateway:
         import json as _json
 
         try:
-            schema = snap.df.schema
+            schema = snap.schema
         except FileNotFoundError:
             if self._schema is None:
                 raise
@@ -465,7 +543,7 @@ class ServingGateway:
         schema = self._schema
         if schema is None:
             try:
-                schema = snap.df.schema
+                schema = snap.schema
             except FileNotFoundError:
                 schema = None
         ok_types = {

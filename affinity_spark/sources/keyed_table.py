@@ -5,7 +5,9 @@ compacted KV store). Backing format is parquet here (Delta Lake in a real
 deployment — MERGE INTO, CDF as the change stream, vacuum for TTL); the
 engine-level semantics are identical and implemented as DataFrame plans:
 
-- write/upsert: merge_upsert (last-write-wins by event time, tombstones)
+- write/upsert: last-write-wins by event time, tombstones delete — a small
+  batch is committed as a delta and merged on read, a large one (or the
+  fold of pending deltas) through merge_upsert
 - read: compacted view; point get / prefix scan push down to the scan
 - layout: repartitioned by key columns on write so equality predicates prune
   files (at 100 TB: partitionBy leading key cols + clustering/z-order)
@@ -21,6 +23,31 @@ readers without a table format dependency:
 - the last ``retain_versions`` snapshots stay on disk so a lazy DataFrame
   over the previous version keeps reading during and after the next commit;
   ``vacuum_versions`` reclaims older ones.
+
+A version is a **base plus an ordered list of deltas** (merge-on-read, the
+reference's table as the compaction of its changelog, ``KVStoreLocal``
+boot/tail over ``Log``):
+
+- the base is the parquet files a full write left (``overwrite``, a
+  merge, ``compact``), clustered by key; a delta is one key-sorted parquet
+  file of one ``upsert`` batch, at ``<version>/_deltas/<seq>/`` (Spark's
+  file index skips paths that start with ``_``, so a plain read of the dir
+  sees the base alone);
+- a delta commit hardlinks the base's and the earlier deltas' files into
+  the new version dir and adds its own, so a 10-row upsert writes 10 rows,
+  not the table, and every version dir stays an immutable, self-contained
+  CAS token (retention and vacuum unlink names; shared inodes survive);
+- a read of a version with deltas is one ``compact_latest`` over base ∪
+  deltas: last write wins by (ts, tiebreaks, delta ordinal), the rule
+  ``merge_upsert`` applies one batch at a time;
+- an upsert takes the copy-on-write merge instead, which folds the base
+  and every pending delta into a new base (the compaction), when the
+  table has no base yet, is partitioned (``overwrite_partitions`` carries
+  partition dirs only), its batch carries a tombstone (a tombstone delta
+  would make a later, older row lose to it, where the merge lets that row
+  bring the key back), its batch's columns differ from the base's, its
+  batch is over ``MAX_DELTA_ROWS``, or ``MAX_DELTAS`` deltas are pending
+  (the bound, measured below); ``compact()`` also folds pending deltas.
 
 Only this module knows how a version is laid out and read: other code
 reads one through the :class:`Snapshot` handle ``KeyedTable.snapshot()``
@@ -39,12 +66,38 @@ from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 from functools import cached_property
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from affinity_spark.operators.kv import point_get, prefix_scan
+from affinity_spark.operators.kv import compact_latest, point_get, prefix_scan
 from affinity_spark.operators.upsert import merge_upsert
 from affinity_spark.timerange import TimeRange
+
+
+#: pending deltas after which the next upsert folds them into a new base.
+#: Set from a probe of the read-side cost on the serve table's shape
+#: (100k rows of four longs in 32 base files, 10-row deltas, ``local[4]``
+#: on a 4-vCPU VM, single runs): a Spark-plan point read took 0.4-0.6 s
+#: with 1 to 32 pending deltas, 0.8 s with 64 and 1.0 s with 128 (process
+#: CPU 2-3x), as each delta is one more file to open; a gateway load of
+#: base plus deltas stayed at ~0.2 s. The fold into a new base costs what
+#: a copy-on-write upsert did (~1-2 s), once per 32 upserts.
+MAX_DELTAS = 32
+
+#: an upsert batch over this many rows is merged into a new base, not
+#: written as a delta: the delta path collects the batch to the driver,
+#: and this bounds what 32 pending deltas add to every read (the same
+#: probe: at 10k rows a delta commit still cost ~half the merge, and the
+#: gateway folded a delta of up to 100k rows in 30-50 ms).
+MAX_DELTA_ROWS = 10_000
+
+DELTAS = "_deltas"
+# the read-side ordinal of a row's file: 0 for the base, seq for a delta
+_ORD = "_delta_ordinal"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -59,12 +112,25 @@ def _parquet_files(vdir: str) -> dict[str, int]:
     return {os.path.relpath(p, vdir): os.path.getsize(p) for p in paths}
 
 
+def _link(src_dir: str, dst_dir: str, rel: str) -> None:
+    """Carry a file into a new version under the same relative path: a
+    hardlink, so the new version shares its inode (no data IO)."""
+    dst = os.path.join(dst_dir, rel)
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.link(os.path.join(src_dir, rel), dst)
+
+
+def _is_delta(rel: str) -> bool:
+    return rel.startswith(DELTAS + os.sep)
+
+
 @dataclass(frozen=True)
 class Snapshot:
     """One committed version of a :class:`KeyedTable`: ``version_dir`` (the
     CAS token a write's ``expected_base`` takes; ``None`` before the first
-    commit), its ``meta``, and, built on first use, its rows ``df`` and
-    parquet ``files`` (both raise ``FileNotFoundError`` when nothing is
+    commit), its ``meta``, and, built on first use, its rows ``df``, its
+    parquet ``files``, and their split into the ``base`` and the ordered
+    ``deltas`` (all raise ``FileNotFoundError`` when nothing is
     committed). Version dirs are immutable, so a handle keeps describing
     its commit after later ones land, until retention reclaims the dir."""
 
@@ -79,12 +145,48 @@ class Snapshot:
 
     @cached_property
     def df(self) -> DataFrame:
-        return self.table._read_dir(self._dir())
+        """The version's rows: the base merged with the deltas."""
+        return self.table._read(self)
+
+    @cached_property
+    def schema(self) -> StructType:
+        """The rows' column names and types, as ``df`` has them, from the
+        base's memoized schema: no read is planned and no job runs."""
+        base = self.table._base_schema(self)
+        if not self.deltas:
+            return base
+        keys = self.table.key_cols  # compact_latest puts the key first
+        return StructType([base[k] for k in keys] + [f for f in base if f.name not in keys])
+
+    @cached_property
+    def base_df(self) -> DataFrame:
+        """The base's rows alone, before any delta."""
+        return self.table._read(self, self.base)
 
     @cached_property
     def files(self) -> dict[str, int]:
         """Parquet files (paths relative to ``version_dir``) -> bytes."""
         return _parquet_files(self._dir())
+
+    @cached_property
+    def base(self) -> tuple[str, ...]:
+        """The base's files, which are also its identity: a delta commit
+        links them into the next version under the same names, so the
+        versions that share a base share this."""
+        return tuple(f for f in self.files if not _is_delta(f))
+
+    @cached_property
+    def deltas(self) -> tuple[str, ...]:
+        """The delta files, oldest first."""
+        return tuple(f for f in self.files if _is_delta(f))
+
+    def delta_tables(self, start: int = 0) -> list[pa.Table]:
+        """The rows of ``deltas[start:]``, oldest first, read with pyarrow
+        (no Spark job)."""
+        return [
+            pq.ParquetFile(os.path.join(self._dir(), f)).read()
+            for f in self.deltas[start:]
+        ]
 
 
 class KeyedTable:
@@ -132,7 +234,7 @@ class KeyedTable:
         # reference's external/readonly state rejects writes,
         # KVStoreLocalSpec.scala:58)
         self.external = external
-        # (version dir, its schema): see _read_dir
+        # (base files, their schema): see _base_schema
         self._schema_memo = None
         os.makedirs(path, exist_ok=True)
 
@@ -255,21 +357,43 @@ class KeyedTable:
     def read(self) -> DataFrame:
         return self.snapshot().df
 
-    def _read_dir(self, vdir: str, files: Sequence[str] = ()) -> DataFrame:
-        """The one way a version dir (or some of its ``files``) is read, with
-        its schema memoized: without the memo every read runs a footer-
-        inference Spark job (~160 ms per scan of a 128-dir table locally).
-        Version dirs are immutable, so the memo never goes stale; only the
-        latest dir read is kept."""
+    def _base_schema(self, snap: Snapshot) -> StructType:
+        """The schema of ``snap``'s base, memoized by the base: without the
+        memo every read runs a footer-inference Spark job (~160 ms per
+        scan of a 128-dir table locally). A base's files are immutable and
+        a delta commit keeps them, so the memo never goes stale and a
+        delta commit needs no new inference; only the latest base is
+        kept."""
         memo = self._schema_memo
-        if memo is None or memo[0] != vdir:
-            memo = self._schema_memo = (vdir, self.spark.read.parquet(vdir).schema)
-        reader = self.spark.read.schema(memo[1])
-        if not files:
-            return reader.parquet(vdir)
-        return reader.option("basePath", vdir).parquet(
-            *(os.path.join(vdir, f) for f in files)
+        if memo is None or memo[0] != snap.base:
+            memo = self._schema_memo = (
+                snap.base, self.spark.read.parquet(snap.version_dir).schema
+            )
+        return memo[1]
+
+    def _read(self, snap: Snapshot, files: Sequence[str] | None = None) -> DataFrame:
+        """The one way a version (or some of its ``files``) is read: the
+        base alone when no delta is read, else one ``compact_latest`` over
+        base ∪ deltas, last write winning by (ts, tiebreaks, ordinal)."""
+        vdir = snap._dir()
+        reader = self.spark.read.schema(self._base_schema(snap))
+        if files is None:
+            base, deltas = reader.parquet(vdir), snap.deltas
+        else:
+            kept = [os.path.join(vdir, f) for f in files if not _is_delta(f)]
+            deltas = [f for f in files if _is_delta(f)]
+            base = reader.option("basePath", vdir).parquet(*kept) if kept else None
+        if not deltas:
+            return base
+        seq = F.regexp_extract(F.col("_metadata.file_path"), rf"/{DELTAS}/(\d+)/", 1)
+        rows = reader.parquet(*(os.path.join(vdir, f) for f in deltas)).withColumn(
+            _ORD, seq.cast("int")
         )
+        if base is not None:
+            rows = base.withColumn(_ORD, F.lit(0)).unionByName(rows)
+        return compact_latest(
+            rows, self.key_cols, self.ts_col, [*self.tiebreak_cols, _ORD]
+        ).drop(_ORD)
 
     def versions(self) -> list[str]:
         """Retained snapshot version names, oldest first (bounded by the
@@ -291,7 +415,7 @@ class KeyedTable:
                 f"version {version!r} not retained at {self.path}; "
                 f"available: {self.versions()}"
             )
-        return self._read_dir(vdir)
+        return Snapshot(self, vdir).df
 
     def overwrite(
         self,
@@ -395,11 +519,9 @@ class KeyedTable:
                     continue
                 if entry in touched_dirs:
                     continue  # the delta write is this partition's new truth
-                dst = os.path.join(out, entry)
-                os.makedirs(dst, exist_ok=True)
                 for fname in os.listdir(src):
                     if fname.endswith(".parquet"):
-                        os.link(os.path.join(src, fname), os.path.join(dst, fname))
+                        _link(expected_base, out, os.path.join(entry, fname))
 
         self._commit(write, expected_base, meta)
 
@@ -418,9 +540,11 @@ class KeyedTable:
     def upsert(self, updates: DataFrame, expected_base=_UNSET) -> None:
         """MERGE: last-write-wins by (ts, tiebreaks); tombstones delete.
 
-        The base version is captured before the merge and CAS-verified at
-        commit: two concurrent upserts cannot silently lose one side's
-        updates — the loser raises ``ConcurrentWriteError``.
+        Commits the batch as one delta when it can (see the module
+        docstring), else merges the base, the pending deltas and the batch
+        into a new base. The base version is captured before the write
+        and CAS-verified at commit: two concurrent upserts cannot silently
+        lose one side's updates — the loser raises ``ConcurrentWriteError``.
 
         ``expected_base`` lets a caller whose WRITE SET was derived from a
         specific snapshot (e.g. the gateway's insert-only anti-join) tie
@@ -429,11 +553,23 @@ class KeyedTable:
         the version dir (or ``None`` for a first write); leave unset to
         capture the current pointer here.
         """
-        if expected_base is KeyedTable._UNSET:
-            expected_base = self._current_version_dir()
-        base = (
-            updates.limit(0) if expected_base is None else self._read_dir(expected_base)
+        snap = (
+            self.snapshot()
+            if expected_base is KeyedTable._UNSET
+            else Snapshot(self, expected_base)
         )
+        rows = self._delta_rows(snap, updates)
+        if rows is not None:
+            def write(out: str) -> None:
+                for f in snap.files:
+                    _link(snap.version_dir, out, f)
+                d = os.path.join(out, DELTAS, f"{len(snap.deltas) + 1:06d}")
+                os.makedirs(d)
+                pq.write_table(rows, os.path.join(d, f"{uuid.uuid4().hex}.parquet"))
+
+            self._commit(write, snap.version_dir, None)
+            return
+        base = updates.limit(0) if snap.version_dir is None else snap.df
         if self.tombstone_col and self.tombstone_col not in base.columns:
             # the merge drops the tombstone column from what it commits
             base = base.withColumn(self.tombstone_col, F.lit(False))
@@ -441,7 +577,37 @@ class KeyedTable:
             base, updates, self.key_cols, self.ts_col,
             self.tiebreak_cols, self.tombstone_col,
         )
-        self.overwrite(merged, expected_base=expected_base)
+        self.overwrite(merged, expected_base=snap.version_dir)
+
+    def _delta_rows(self, snap: Snapshot, updates: DataFrame) -> pa.Table | None:
+        """``updates`` as one delta onto ``snap``: its rows in the base's
+        columns, key-sorted; or None when the upsert must merge instead."""
+        if (
+            snap.version_dir is None
+            or self.partition_col
+            or len(snap.deltas) >= MAX_DELTAS
+        ):
+            return None
+        schema = self._base_schema(snap)
+        tomb = self.tombstone_col
+        if tomb in schema.fieldNames():
+            return None  # the base keeps tombstone rows: only the merge drops them
+        if {f.name: f.dataType for f in updates.schema if f.name != tomb} != {
+            f.name: f.dataType for f in schema
+        }:
+            return None
+        cols = [f.name for f in schema]
+        if tomb in updates.columns:
+            cols.append(tomb)
+        rows = updates.select(*cols).limit(MAX_DELTA_ROWS + 1).toArrow()
+        if rows.num_rows > MAX_DELTA_ROWS:
+            return None
+        if tomb in rows.column_names:
+            # a NULL flag drops the row in the merge as a true one does
+            if pc.any(pc.fill_null(rows[tomb], True)).as_py():
+                return None
+            rows = rows.drop_columns([tomb])
+        return rows.sort_by([(k, "ascending") for k in self.key_cols])
 
     # --- reads ----------------------------------------------------------
 
@@ -575,7 +741,7 @@ class KeyedTable:
         ]
         if not keep:
             return point_get(full, key).limit(0)
-        return point_get(self._read_dir(snap.version_dir, keep), key)
+        return point_get(self._read(snap, keep), key)
 
     def file_stats(self) -> dict:
         """Physical layout of the current snapshot: file count + byte sizes.
@@ -594,7 +760,8 @@ class KeyedTable:
         }
 
     def compact(self, target_file_bytes: int = 128 << 20) -> dict:
-        """Rewrite the current snapshot into ceil(total/target) files.
+        """Rewrite the current snapshot into ceil(total/target) files,
+        folding its pending deltas into the new base.
 
         The 100 TB small-file problem: streaming upserts commit one
         trigger's worth of rows per bucket, so a long-lived table decays
@@ -607,7 +774,8 @@ class KeyedTable:
         reference serializes writes through partition masters
         (``core/src/main/scala/io/amient/affinity/core/util/KVStoreLocal.scala``-style
         single-writer semantics). No-op (returns current stats, no new
-        version) when the table is already at or below the target count.
+        version) when the table has no deltas and is already at or below
+        the target count.
         """
         if self.external:
             raise PermissionError(f"table at {self.path} is external/read-only")
@@ -618,7 +786,9 @@ class KeyedTable:
         # dir, and admits REPLACE whole dirs (overwrite_partitions) — there
         # is no small-file decay to repair, and a rewrite here would churn
         # a new version per maintainer tick for nothing
-        if self.single_file_partitions or stats["n_files"] <= n_target:
+        if self.single_file_partitions or (
+            stats["n_files"] <= n_target and not snap.deltas
+        ):
             return {**stats, "compacted": False, "n_files_after": stats["n_files"]}
         self._commit(
             lambda out: self._write_snapshot(snap.df, out, n_target),

@@ -1,8 +1,8 @@
 """KeyedTable.snapshot(): one read of the version pointer gives a handle
 whose version dir, metadata, rows and files describe the same commit;
 and the table, read through the handle and through the serving gateway,
-agrees with a python model of the merge under random upserts,
-compactions and vacuums."""
+agrees with a python model of the merge under random upserts (as deltas
+and as merges), racing writers, compactions and vacuums."""
 
 from __future__ import annotations
 
@@ -22,6 +22,7 @@ from hypothesis.stateful import (
 )
 
 from affinity_spark.serving import ServingGateway
+from affinity_spark.sources import keyed_table
 from affinity_spark.sources.keyed_table import ConcurrentWriteError, KeyedTable
 
 SCHEMA = "k long, ts long, tb long, v long"
@@ -123,24 +124,33 @@ batches = st.lists(
     max_size=5,
     unique_by=lambda r: r[0],
 )
+# batches with no tombstone: these commit as deltas
+live_batches = batches.map(lambda b: [r[:4] + (False,) for r in b])
 
 
-def test_table_and_gateway_match_a_model_of_the_merge(spark, tmp_path):
+def test_table_and_gateway_match_a_model_of_the_merge(spark, tmp_path, monkeypatch):
+    # two pending deltas fold into a new base: all three commit paths run
+    monkeypatch.setattr(keyed_table, "MAX_DELTAS", 2)
+
+    def table(path: str) -> KeyedTable:
+        return KeyedTable(
+            spark, path, ["k"], "ts",
+            tiebreak_cols=["tb"], tombstone_col="dead", num_buckets=2,
+        )
+
+    def frame(batch):
+        return spark.createDataFrame(
+            batch, "k long, ts long, tb long, v long, dead boolean"
+        )
+
     class Machine(RuleBasedStateMachine):
         def __init__(self):
             super().__init__()
-            self.t = KeyedTable(
-                spark, tempfile.mkdtemp(dir=tmp_path), ["k"], "ts",
-                tiebreak_cols=["tb"], tombstone_col="dead", num_buckets=2,
-            )
+            self.t = table(tempfile.mkdtemp(dir=tmp_path))
             self.gw = ServingGateway(table=self.t)
             self.model: dict[int, tuple[int, int, int]] = {}
 
-        @rule(batch=batches)
-        def upsert(self, batch):
-            self.t.upsert(spark.createDataFrame(
-                batch, "k long, ts long, tb long, v long, dead boolean"
-            ))
+        def apply(self, batch):
             for k, ts, tb, v, dead in batch:
                 # greatest (ts, tb) wins; the update wins an exact tie
                 if k in self.model and (ts, tb) < self.model[k][:2]:
@@ -149,6 +159,34 @@ def test_table_and_gateway_match_a_model_of_the_merge(spark, tmp_path):
                     self.model.pop(k, None)
                 else:
                     self.model[k] = (ts, tb, v)
+
+        @rule(batch=batches)
+        def upsert(self, batch):
+            self.t.upsert(frame(batch))
+            self.apply(batch)
+
+        @rule(batch=live_batches)
+        def upsert_live(self, batch):
+            self.t.upsert(frame(batch))
+            self.apply(batch)
+
+        @rule(batch=live_batches, rival=batches)
+        def racing_upsert(self, batch, rival):
+            """A second writer on the same path commits between this
+            upsert's base capture and its CAS: this one loses."""
+            commit = self.t._commit_version
+
+            def racing(*a, **kw):
+                table(self.t.path).upsert(frame(rival))
+                return commit(*a, **kw)
+
+            self.t._commit_version = racing
+            try:
+                with pytest.raises(ConcurrentWriteError):
+                    self.t.upsert(frame(batch))
+            finally:
+                del self.t._commit_version
+            self.apply(rival)
 
         @rule()
         def compact(self):
@@ -167,6 +205,7 @@ def test_table_and_gateway_match_a_model_of_the_merge(spark, tmp_path):
                 assert want == []
                 return
             assert _rows(h.df.select("k", "ts", "tb", "v")) == want
+            assert self.gw._snapshot() is not None  # served from memory
             got = self.gw.prefix_range({})
             assert sorted((r["k"], r["ts"], r["tb"], r["v"]) for r in got) == want
 
@@ -174,7 +213,7 @@ def test_table_and_gateway_match_a_model_of_the_merge(spark, tmp_path):
         Machine,
         settings=settings(
             max_examples=10,
-            stateful_step_count=6,
+            stateful_step_count=8,
             deadline=None,
             suppress_health_check=list(HealthCheck),
         ),

@@ -83,3 +83,59 @@ def test_normalize_plan_masks_per_process_counters():
     # a real plan change still shows
     assert normalize_plan(_PLAN.replace("RoundRobin", "Hash")) != norm
     assert normalize_plan(_PLAN.replace("assigned", "codes")) != norm
+
+
+def _executed(final: list[str], initial: list[str]) -> str:
+    """A formatted plan of an executed adaptive plan: ``final`` and
+    ``initial`` are (indent, name) tree rows, numbered as Spark does
+    (final-plan nodes first; a node both plans share keeps one id)."""
+    ids: dict[str, int] = {}
+    tree = ["== Physical Plan ==", "AdaptiveSparkPlan ({root})", "+- == Final Plan =="]
+    for section, rows in (("final", final), ("initial", initial)):
+        if section == "initial":
+            tree.append("+- == Initial Plan ==")
+        for depth, name in rows:
+            key = name if name.startswith("Scan") else f"{section}:{depth}:{name}"
+            ids.setdefault(key, len(ids) + 1)
+            prefix = "   " + ("   " * (depth - 1) + "+- " if depth else "")
+            tree.append(f"{prefix}{name} ({ids[key]})")
+    root = len(ids) + 1
+    details = [
+        f"({i}) {k.rsplit(':', 1)[-1]}\nOutput [1]: [a#{i + 40}]" for k, i in ids.items()
+    ] + [f"({root}) AdaptiveSparkPlan\nArguments: isFinalPlan=true"]
+    return "\n".join(tree).format(root=root) + "\n\n" + "\n\n".join(details) + "\n"
+
+
+def test_normalize_plan_drops_the_final_plan_of_an_executed_adaptive_plan():
+    """Two runs of one cached query: AQE re-planned the final plan
+    differently (an extra shuffle read, other ids); the initial plan is
+    the same, and that is what the dumps compare."""
+    from affinity_spark.plans.introspect import normalize_plan
+
+    initial = [(0, "Project"), (1, "Exchange"), (2, "Scan parquet")]
+    run1 = _executed(
+        [(0, "ResultQueryStage"), (1, "Project"), (2, "ShuffleQueryStage"),
+         (3, "Scan parquet")],
+        initial,
+    )
+    run2 = _executed(
+        [(0, "ResultQueryStage"), (1, "Project"), (2, "AQEShuffleRead"),
+         (3, "ShuffleQueryStage"), (4, "Scan parquet")],
+        initial,
+    )
+    assert run1 != run2
+    norm = normalize_plan(run1)
+    assert normalize_plan(run2) == norm == normalize_plan(norm)
+    assert "Final Plan" not in norm and "QueryStage" not in norm
+    # the shared scan keeps its block; the rest renumber densely
+    assert "(1) Scan parquet" in norm and "(3) Exchange" in norm
+    assert "AdaptiveSparkPlan (4)" in norm and "(4) AdaptiveSparkPlan" in norm
+    # a change to the initial plan still shows
+    other = initial[:1] + [(1, "Sort")] + initial[2:]
+    assert normalize_plan(_executed([(0, "ResultQueryStage")], other)) != norm
+    # a plan that never ran is left as it is
+    assert normalize_plan(_PLAN) == normalize_plan(normalize_plan(_PLAN))
+    # an RDD id counts the RDDs the process made before
+    scan = "Arguments: [v#1], MapPartitionsRDD[{}] at localCheckpoint at {}.java:0"
+    assert normalize_plan(scan.format(4957, "X")) == normalize_plan(scan.format(4942, "X"))
+    assert normalize_plan(scan.format(4957, "X")) != normalize_plan(scan.format(4957, "Y"))

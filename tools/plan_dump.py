@@ -2,7 +2,8 @@
 
 Usage: python tools/plan_dump.py <out_dir> <suffix> [sf_dir] q1 q2 ...
 Writes <out_dir>/<query>_<suffix>.txt per query (e.g. plans/r14/foo_before.txt).
-The text is passed through ``normalize_plan``, so dumps of one plan taken in
+The text is passed through ``normalize_plan`` (which also drops the AQE final
+plan of a frame the query already ran), so dumps of one plan taken in
 two processes (e.g. a parent commit and a change) compare with ``diff -r``.
 Plan shape is scale-invariant for the properties the files document, so the
 default sf is the smallest (fast frame construction, identical operators).

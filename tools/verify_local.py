@@ -66,6 +66,8 @@ def _print_diff(scols, srows, dcols, drows, limit: int = 10) -> None:
 
 
 def main() -> int:
+    # one line per query as it finishes, also when stdout is a file
+    sys.stdout.reconfigure(line_buffering=True)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
     spark = get_spark("verify-local")
