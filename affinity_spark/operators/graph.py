@@ -5,16 +5,38 @@ component (affinity ``examples/example-distributed-graph/.../GraphApi.scala:96-1
 ``collectComponent`` BFS; batch analysis in ``AnalyticsSystemSpec.scala``).
 Spark-first: iterative min-label propagation — each round joins labels
 across edges and keeps the per-vertex min — the classic "hash-to-min"
-scheme (Rastogi et al. 2012), O(log d) rounds on real graphs. Each round is
-one shuffle on vertex id; results are checkpointed via localCheckpoint to
-cut the lineage so plans don't grow with iterations (what kills naive
-iterative Spark jobs at scale).
+scheme (Rastogi et al. 2012), O(log d) rounds on real graphs.
+
+A round is one job set: the round's labels are cut from their lineage by
+an eager localCheckpoint (so plans don't grow with iterations, what kills
+naive iterative Spark jobs at scale), and the convergence probe is an
+aggregate *observed* on that same job (``DataFrame.observe``), not a
+collect of its own. The symmetrized edges are built with one shuffle,
+on the join key ``v``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _observed_checkpoint(frame: DataFrame, *metrics: Column) -> tuple[DataFrame, list]:
+    """``frame`` cut from its lineage by an eager localCheckpoint, and the
+    values of the aggregate ``metrics`` observed on the rows that job
+    wrote: a probe that costs no Spark job of its own."""
+    obs = Observation()
+    names = [f"m{i}" for i in range(len(metrics))]
+    observed = frame.observe(obs, *(m.alias(n) for m, n in zip(metrics, names)))
+    out = observed.localCheckpoint(eager=True)
+    got = obs.get
+    return out, [got[n] for n in names]
+
+
+def _exact_sum(col: Column) -> Column:
+    # decimal(38) keeps the sum exact at any vertex-id scale (no silent
+    # double round-off, no int64 overflow)
+    return F.sum(col.cast("decimal(38,0)"))
 
 
 def connected_components(
@@ -22,42 +44,43 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(vertex, component) with component = min vertex id in the component.
 
     Matches the reference's component-id convention (min vertex id,
     ``AnalyticsSystemSpec.scala:50-52``). Undirected: edges are symmetrized.
+
+    Labels start as ``label(v) = v``, so round 1 is built from the edges
+    alone: ``least(v, min(neighbour))``. Labels only decrease, so the
+    labeling changed iff sum(component) strictly decreased; round 1 also
+    observes sum(vertex), the sum of the starting labels. Round 1 counts
+    as the first of ``max_iter`` (>= 1) rounds; ``stats['rounds']`` (when
+    a dict is passed) records the rounds run, the last one being the
+    round that changed nothing unless ``max_iter`` cut the loop.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be at least 1, got {max_iter}")
+    # one shuffle: HashPartitioning(v) already satisfies the distinct's
+    # clustering
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .repartition("v")
         .distinct()
-    )
-    sym = sym.repartition("u").localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("u").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
         .localCheckpoint(eager=True)
     )
-
-    # Convergence probe: min-label propagation can only DECREASE labels, so
-    # the labeling changed iff sum(component) strictly decreased — one
-    # cheap aggregate per round instead of an old-vs-new join. decimal(38)
-    # keeps the sum exact at any vertex-id scale (no silent double
-    # round-off, no int64 overflow).
-    # NOTE: fusing change-detection into the propagation aggregate
-    # (carrying the old label as an extra union column) measured ~40%
-    # SLOWER at sf0.1 — the extra long through the shuffle costs more than
-    # a driver-side aggregate probe.
-    def label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    prev_sum = label_sum(labels)
-    for _ in range(max_iter):
-        # neighbor's current label, propagated across each edge
+    # sym is symmetric, so grouping on v sees every vertex with its
+    # neighbours
+    first = sym.groupBy("v").agg(
+        F.least(F.col("v"), F.min("u")).alias("component")
+    ).withColumnRenamed("v", "vertex")
+    labels, (prev_sum, cur_sum) = _observed_checkpoint(
+        first, _exact_sum(F.col("vertex")), _exact_sum(F.col("component"))
+    )
+    rounds = 1
+    while cur_sum != prev_sum and rounds < max_iter:
+        # neighbour's current label, propagated across each edge
         prop = (
             sym.join(labels, sym["v"] == labels["vertex"], "inner")
             .select(F.col("u").alias("vertex"), F.col("component"))
@@ -67,13 +90,14 @@ def connected_components(
             .union(prop)
             .groupBy("vertex")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
         )
-        new_sum = label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+        prev_sum = cur_sum
+        labels, (cur_sum,) = _observed_checkpoint(
+            new_labels, _exact_sum(F.col("component"))
+        )
+        rounds += 1
+    if stats is not None:
+        stats["rounds"] = rounds
     return labels
 
 
@@ -100,17 +124,16 @@ def connected_components_star(
       edge), every smaller-or-equal neighbor and u itself re-point to the
       minimum — collapses local stars.
 
-    Labels only decrease, so the convergence probe is the same cheap
-    decimal label-sum the propagation variant uses. Edges are
-    localCheckpoint'ed per round to cut lineage. ``stats['rounds']`` (when
-    a dict is passed) records the rounds used — test-pinned to stay
-    logarithmic on a path graph.
+    Labels only decrease, so the edge set stops changing at the fixpoint;
+    the probe (edge count and decimal endpoint sum) is observed on the
+    round's localCheckpoint job, as the propagation variant's label sum
+    is. ``stats['rounds']`` (when a dict is passed) records the rounds
+    used — test-pinned to stay logarithmic on a path graph.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -144,22 +167,15 @@ def connected_components_star(
             .distinct()
         )
 
-    def edge_probe(frame: DataFrame):
-        # (count, endpoint-sum) — a changed edge set with an identical sum
-        # alone is conceivable mid-run, the pair makes aliasing a
-        # two-coincidence event; equivalence tests pin the output anyway
-        row = frame.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("u") + F.col("v")).cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        return (row["n"], row["s"])
-
-    prev = edge_probe(e)
+    # (count, endpoint-sum): a changed edge set with an identical sum
+    # alone is conceivable mid-run, the pair makes aliasing a
+    # two-coincidence event; equivalence tests pin the output anyway
+    probe = (F.count(F.lit(1)), _exact_sum(F.col("u") + F.col("v")))
+    e, prev = _observed_checkpoint(e, *probe)
     rounds = 0
     for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint(eager=True)
+        e, cur = _observed_checkpoint(small_star(large_star(e)), *probe)
         rounds += 1
-        cur = edge_probe(e)
         if cur == prev:
             break
         prev = cur

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from affinity_spark.cache import temp_root, track as _track_cache
 from affinity_spark.operators import dedup as dd
-from affinity_spark.operators.graph import connected_components
 
 from affinity_spark.registry._shared import (
     _duck_lsh_bands_cte,

@@ -27,7 +27,6 @@ from affinity_spark.functions.text import (
 )
 from affinity_spark.operators import dedup as dd
 from affinity_spark.operators.multimodal import blob_metadata, extract_features
-from affinity_spark.operators.graph import connected_components
 from affinity_spark.operators.index import build_inverted_index, index_lookup
 
 from affinity_spark.registry._shared import (

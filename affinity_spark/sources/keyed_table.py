@@ -131,8 +131,9 @@ class Snapshot:
     commit), its ``meta``, and, built on first use, its rows ``df``, its
     parquet ``files``, and their split into the ``base`` and the ordered
     ``deltas`` (all raise ``FileNotFoundError`` when nothing is
-    committed). Version dirs are immutable, so a handle keeps describing
-    its commit after later ones land, until retention reclaims the dir."""
+    committed or retention has reclaimed the dir). Version dirs are
+    immutable, so a handle keeps describing its commit after later ones
+    land, until retention reclaims the dir."""
 
     table: KeyedTable = field(repr=False, compare=False)
     version_dir: str | None
@@ -166,7 +167,10 @@ class Snapshot:
     @cached_property
     def files(self) -> dict[str, int]:
         """Parquet files (paths relative to ``version_dir``) -> bytes."""
-        return _parquet_files(self._dir())
+        vdir = self._dir()
+        if not os.path.isdir(vdir):
+            raise FileNotFoundError(f"version {vdir} was reclaimed")
+        return _parquet_files(vdir)
 
     @cached_property
     def base(self) -> tuple[str, ...]:

@@ -4,7 +4,59 @@ matching the reference's min-vertex-id component convention
 
 from __future__ import annotations
 
-from affinity_spark.operators.graph import connected_components
+import threading
+
+import pytest
+
+from affinity_spark.operators.graph import (
+    connected_components,
+    connected_components_star,
+)
+
+
+def _components(edges) -> dict:
+    """Union-find model: vertex -> min vertex id of its component."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in list(parent)}
+
+
+def _propagated(edges, rounds: int) -> dict:
+    """Model of ``rounds`` rounds of min-label propagation from
+    label(v) = v: each round a vertex keeps the min of its own and its
+    neighbours' labels."""
+    nbrs: dict = {}
+    for u, v in edges:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    labels = {x: x for x in nbrs}
+    for _ in range(rounds):
+        labels = {
+            x: min([labels[x], *(labels[n] for n in nbrs[x])]) for x in nbrs
+        }
+    return labels
+
+
+def _cc(spark, edges, fn=connected_components, **kw) -> dict:
+    df = spark.createDataFrame(edges, "src long, dst long")
+    return {r.vertex: r.component for r in fn(df, **kw).collect()}
+
+
+_TWO_COMPONENTS = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)]
+_CHAIN = [(i, i + 1) for i in range(9)]
+# the graph_components query's shape: customer <-> (nation + 1e6)
+_BIPARTITE = [(c, 1_000_000 + c % 5) for c in range(1, 101)]
 
 
 def test_two_components(spark):
@@ -208,3 +260,105 @@ def test_triangle_counts_skewed_hub_matches_reference(spark):
         r["vertex"]: r["n_triangles"] for r in triangle_counts(df).collect()
     }
     assert got == _tri_py(edges)
+
+
+@pytest.mark.parametrize(
+    "edges, rounds",
+    [(_TWO_COMPONENTS, 3), (_CHAIN, 10), (_BIPARTITE, 3)],
+    ids=["two_components", "chain", "bipartite"],
+)
+def test_round_count_pinned(spark, edges, rounds):
+    """Round 1 is built from the edges but is still a round: the count,
+    the last round being the one that changed nothing, is what the loop
+    that started from a separate labels frame ran."""
+    stats = {}
+    assert _cc(spark, edges, stats=stats) == _components(edges)
+    assert stats == {"rounds": rounds}
+
+
+def _checkpoint_jobs(spark, monkeypatch, df, fn) -> tuple[int, list[int]]:
+    """(Spark jobs run outside any localCheckpoint, jobs of each
+    localCheckpoint) while ``fn`` runs, each counted under a job group."""
+    sc = spark.sparkContext
+    per_checkpoint: list[int] = []
+    DataFrame = type(df)  # the session's concrete frame class
+    checkpoint = DataFrame.localCheckpoint
+
+    def counted(self, *a, **kw):
+        group = f"cc-checkpoint-{len(per_checkpoint)}"
+        sc.setJobGroup(group, "")
+        try:
+            return checkpoint(self, *a, **kw)
+        finally:
+            sc.setJobGroup("cc-outside", "")
+            per_checkpoint.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counted)
+    sc.setJobGroup("cc-outside", "")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup("cc-outside")), per_checkpoint
+
+
+@pytest.mark.parametrize("fn", [connected_components, connected_components_star])
+def test_no_probe_job_outside_the_round_checkpoints(spark, monkeypatch, fn):
+    """Every Spark job of a call runs inside a round's checkpoint (or the
+    edge build's): the convergence probe is observed on that job, never
+    a collect of its own. Propagation: one checkpoint per round plus the
+    edge build."""
+    df = spark.createDataFrame(_BIPARTITE, "src long, dst long")
+    stats = {}
+    outside, per_checkpoint = _checkpoint_jobs(
+        spark, monkeypatch, df, lambda: fn(df, stats=stats)
+    )
+    assert outside == 0, per_checkpoint
+    assert len(per_checkpoint) == stats["rounds"] + 1
+    assert all(n >= 1 for n in per_checkpoint), per_checkpoint
+
+
+def test_empty_edge_frame_returns(spark):
+    """No rows: the observed probe of an empty frame must still be filled
+    (a blocked ``Observation.get`` would hang the call)."""
+    got = {}
+
+    def run():
+        got["cc"] = _cc(spark, [])
+        got["star"] = _cc(spark, [], connected_components_star)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), "connected_components blocked on an empty frame"
+    assert got == {"cc": {}, "star": {}}
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(5, 5), (6, 6), (1, 1)],  # only self-loops
+        [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (3, 3)],  # duplicates, reversed
+        [(9, 4), (4, 9), (7, 4), (4, 7), (7, 7), (20, 30), (30, 20)],
+    ],
+    ids=["self_loops", "duplicate_and_reversed", "mixed"],
+)
+def test_hostile_shapes_match_union_find(spark, edges):
+    want = _components(edges)
+    assert _cc(spark, edges) == want
+    assert _cc(spark, edges, connected_components_star) == want
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 5])
+def test_max_iter_truncation_matches_k_rounds(spark, k):
+    """On a path of diameter 11, ``max_iter=k`` stops after exactly k
+    rounds of propagation, round 1 included."""
+    path = [(i, i + 1) for i in range(11)]
+    stats = {}
+    assert _cc(spark, path, max_iter=k, stats=stats) == _propagated(path, k)
+    assert stats == {"rounds": k}
+
+
+def test_max_iter_below_one_raises(spark):
+    with pytest.raises(ValueError):
+        _cc(spark, _CHAIN, max_iter=0)

@@ -170,6 +170,22 @@ def test_manifest_pruned_reads_and_changes_see_deltas(spark, tmp_path):
     assert _rows(t.read_version(v0)) == [(i, 10, i) for i in range(8)]
 
 
+def test_a_reclaimed_handle_raises_instead_of_reading_empty(spark, tmp_path):
+    """A handle outlives its version dir once retention reclaims it: its
+    file listing must raise as its rows do, not report a table of 0
+    files."""
+    t = _table(spark, tmp_path, retain_versions=2)
+    stale = t.snapshot()
+    for b in ([(1, 20, 100)], [(2, 20, 200)]):
+        t.upsert(spark.createDataFrame(b, DDL))
+    assert not os.path.isdir(stale.version_dir)
+    for view in ("files", "base", "deltas", "df"):
+        with pytest.raises(FileNotFoundError):
+            getattr(stale, view)
+    with pytest.raises(FileNotFoundError):
+        t._file_stats(stale)
+
+
 def test_post_and_next_get_run_one_spark_job(spark, tmp_path):
     """The cost of a gateway POST: typing its rows is the one Spark job;
     the commit writes a delta and links the base, and the next GET folds
