@@ -35,9 +35,9 @@ def contamination_hits(
     anywhere in the eval set, plus the contaminated flag. Every training
     row appears in the output (0 hits = clean) so the result doubles as a
     filter input (``.filter(~F.col("contaminated"))``)."""
-    grams = word_ngrams(F.col(text_col), n)
+    grams = word_ngrams(text_col, n)
     eval_grams = (
-        eval_docs.select(F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
+        eval_docs.select(F.explode(word_ngrams(text_col, n)).alias("gram"))
         .distinct()
     )
     hits = (
@@ -103,7 +103,7 @@ def contamination_bloom(
     )
 
     eval_grams = eval_docs.select(
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.explode(word_ngrams(text_col, n)).alias("gram")
     )
     bitmap = bloom_bitmap(eval_grams, F.col("gram"), m_bits, k_hashes).collect()
     words = bloom_words_dense(bitmap, m_bits)
@@ -118,7 +118,7 @@ def contamination_bloom(
             "distinct eval-gram count.",
             stacklevel=2,
         )
-    garr = word_ngrams(F.col(text_col), n)
+    garr = word_ngrams(text_col, n)
     return (
         train.select(
             F.col(id_col),

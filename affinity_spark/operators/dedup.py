@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from affinity_spark.functions.murmur2 import stable_token_hash
-from affinity_spark.functions.text import doc_fingerprint, let_bound
+from affinity_spark.functions.text import doc_fingerprint
 
 # --- deterministic minhash permutation constants ---------------------------
 # h_i(x) = (A_i * h0(x) + B_i) mod P ; h0 = md5-derived 32-bit token hash.
@@ -56,23 +56,21 @@ MINHASH_COEF = _lcg_constants(NUM_PERM)
 NUM_BANDS = NUM_PERM // BAND_ROWS
 
 
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of whitespace-tokenized text.
+def word_ngrams(text_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the whitespace-tokenized column
+    ``text_col``.
 
-    The token array is let-bound so the split runs once per doc, not once
-    per gram (O(tokens), not O(tokens²))."""
-
-    def grams_of(tk: Column) -> Column:
-        count = F.greatest(F.size(tk) - (n - 1), F.lit(0))
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
-        )
-        return F.when(count > 0, F.array_distinct(grams)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return let_bound(F.split(F.lower(F.trim(text)), r"\s+"), grams_of)
+    The token array is let-bound (``text.let_bound``'s wrapper form) so the
+    split runs once per doc, not once per gram (O(tokens), not
+    O(tokens²)). One parsed SQL expression: built from Column nodes, the
+    same tree costs one py4j round trip per node."""
+    count = f"greatest(size(tk) - {n - 1}, 0)"
+    return F.expr(
+        rf"transform(array(split(lower(trim(`{text_col}`)), '\\s+')), "
+        f"tk -> CASE WHEN {count} > 0 THEN array_distinct(transform("
+        f"sequence(1, greatest({count}, 1)), k -> concat_ws(' ', slice(tk, k, {n})))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END)[0]"
+    )
 
 
 # --- exact ------------------------------------------------------------------
@@ -97,7 +95,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle, h0) — exploded distinct shingles with stable hashes."""
     return (
-        df.select(F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("shingle"))
+        df.select(F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("shingle"))
         .withColumn("h0", stable_token_hash(F.col("shingle")))
     )
 
@@ -137,6 +135,20 @@ def lsh_bands(signatures: DataFrame, id_col: str) -> DataFrame:
     ).select(id_col, "b.band_id", "b.band_hash")
 
 
+def _salt(id_col: str, cap: int) -> Column:
+    """Sub-bucket of a member of a bucket of ``_bn`` members:
+    ``pmod(stable_token_hash(id), ceil(_bn / cap))``, so 0 everywhere at or
+    below ``cap``. md5-derived (``stable_token_hash``), not xxhash64: the
+    repo's cross-engine hashing convention, so a capped variant stays
+    oracle-replicable in DuckDB."""
+    if cap < 1:
+        raise ValueError(f"bucket cap must be >= 1, got {cap}")
+    return F.pmod(
+        stable_token_hash(F.col(id_col).cast("string")),
+        F.expr(f"cast(ceil(_bn / {int(cap)}) as long)"),
+    )
+
+
 def salt_hot_buckets(
     df: DataFrame, bucket_keys: list[str], id_col: str, cap: int
 ) -> DataFrame:
@@ -144,60 +156,57 @@ def salt_hot_buckets(
     members into ceil(n/cap) hash-assigned sub-buckets (salt 0 everywhere
     else). A subsequent self-join on ``bucket_keys + ["_salt"]`` bounds
     per-task pair work to ~cap² instead of |hot bucket|² — the defense
-    against a degenerate corpus (one band bucket holding 10% of all docs)
+    against a degenerate corpus (one bucket holding 10% of all rows)
     where AQE skew splitting fixes task PLACEMENT but not the quadratic
     pair count itself.
 
     The bucket-size aggregate is bucket-cardinality sized and joins back
     on the same key the self-join shuffles on, so it adds no extra
     corpus-sized shuffle. Trade-off (documented, opt-in): pairs whose
-    members hash to different sub-buckets are lost — acceptable for LSH
-    where other bands re-propose them, and moot for the all-identical-doc
-    hot bucket because the exact-dedup tier ahead of LSH in
-    ``pipeline_clean_corpus`` removes identical docs before banding."""
-    if cap < 1:
-        raise ValueError(f"bucket cap must be >= 1, got {cap}")
+    members hash to different sub-buckets are lost."""
+    salt = _salt(id_col, cap)
     sizes = df.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("_bn"))
-    # md5-derived salt (stable_token_hash), not xxhash64: the repo's
-    # cross-engine hashing convention, so a capped variant stays
-    # oracle-replicable in DuckDB
-    return (
-        df.join(sizes, bucket_keys)
-        .withColumn(
-            "_salt",
-            F.pmod(
-                stable_token_hash(F.col(id_col).cast("string")),
-                F.expr(f"cast(ceil(_bn / {int(cap)}) as long)"),
-            ),
-        )
-        .drop("_bn")
-    )
+    return df.join(sizes, bucket_keys).withColumn("_salt", salt).drop("_bn")
 
 
 def lsh_candidate_pairs(
     bands: DataFrame, id_col: str, bucket_cap: int | None = None
 ) -> DataFrame:
-    """Self-join each LSH bucket → distinct unordered candidate pairs.
+    """Distinct unordered candidate pairs (id_a < id_b): the docs that
+    share an LSH bucket (MMDS ch.3).
 
-    The join key (band_id, band_hash) is high-cardinality and near-uniform;
-    buckets are tiny, so the self-join is linear-ish. A pathological hot
-    bucket (all-identical docs) has two defenses: AQE skew splitting
-    (session default, fixes task placement) and the opt-in ``bucket_cap``
-    salting tier (``salt_hot_buckets``), which bounds the pair COUNT by
-    splitting over-full buckets into sub-buckets at a documented marginal
-    recall cost. Capping only ever removes candidates — never invents
-    them — so the verify stage's output stays a subset of the uncapped
-    run's."""
+    One grouping by (band_id, band_hash) collects each bucket's members,
+    and the pairs of every bucket of two or more are enumerated by two
+    explodes. The bands frame is read once: a self-join reads it on both
+    sides, and a broadcast build side is never reused, so the band kernel
+    upstream ran twice.
+
+    A pathological hot bucket (all-identical docs) has two defenses: AQE
+    skew splitting (session default, fixes task placement) and the opt-in
+    ``bucket_cap`` salting tier, which bounds the pair COUNT by splitting
+    each over-full bucket's members into ceil(n/cap) sub-buckets (the
+    ``salt_hot_buckets`` salt) and regrouping on the salt, at a marginal
+    recall cost: pairs split across sub-buckets are lost, which is
+    acceptable for LSH where other bands re-propose them, and moot for the
+    all-identical-doc hot bucket because the exact-dedup tier ahead of LSH
+    in ``pipeline_clean_corpus`` removes identical docs before banding.
+    Capping only ever removes candidates — never invents them — so the
+    verify stage's output stays a subset of the uncapped run's."""
     keys = ["band_id", "band_hash"]
+    buckets = bands.groupBy(*keys).agg(F.collect_list(id_col).alias("_ids"))
     if bucket_cap is not None:
-        bands = salt_hot_buckets(bands, keys, id_col, bucket_cap)
-        keys = keys + ["_salt"]
-    a = bands.select(F.col(id_col).alias("id_a"), *keys)
-    b = bands.select(F.col(id_col).alias("id_b"), *keys)
+        buckets = (
+            buckets.filter(F.size("_ids") >= 2)
+            .select(*keys, F.size("_ids").alias("_bn"), F.explode("_ids").alias(id_col))
+            .withColumn("_salt", _salt(id_col, bucket_cap))
+            .groupBy(*keys, "_salt")
+            .agg(F.collect_list(id_col).alias("_ids"))
+        )
     return (
-        a.join(b, keys)
+        buckets.filter(F.size("_ids") >= 2)
+        .select(F.explode("_ids").alias("id_a"), "_ids")
+        .select("id_a", F.explode("_ids").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -267,38 +276,12 @@ def jaccard_verify_exact(
     )
 
 
-def _h0_expr(shingle: Column) -> Column:
-    """Inline stable 32-bit token hash (same math as stable_token_hash) —
-    usable inside higher-order-function lambdas."""
-    return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long")
-
-
 def doc_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingles array<string>, n_shingles) — one row per doc, no explode."""
-    arr = word_ngrams(F.col(text_col), n)
+    arr = word_ngrams(text_col, n)
     return df.select(
         F.col(id_col), arr.alias("shingles"), F.size(arr).alias("n_shingles")
     )
-
-
-def minhash_signatures_mapside(docs_arr: DataFrame, id_col: str) -> DataFrame:
-    """MinHash signatures with ZERO shuffle: per doc,
-    ``sig_i = array_min(transform(shingles, s -> (A_i*h0(s)+B_i) % P))``.
-
-    Identical values to the explode+groupBy ``minhash_signatures`` (same
-    hash, same permutations) but the whole computation is a map-side
-    projection inside whole-stage codegen — at 100 TB this removes the
-    260k-rows-per-5k-docs shingle shuffle entirely. Docs with no shingles
-    get null signatures and are excluded (they can't match anything).
-    """
-    def perm(a: int, b: int):
-        return lambda s: (F.lit(a) * _h0_expr(s) + F.lit(b)) % F.lit(MINHASH_P)
-
-    sigs = [
-        F.array_min(F.transform(F.col("shingles"), perm(a, b))).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(MINHASH_COEF)
-    ]
-    return docs_arr.filter(F.col("n_shingles") > 0).select(F.col(id_col), *sigs)
 
 
 def jaccard_verify_arrays(
@@ -332,105 +315,49 @@ def jaccard_verify_arrays(
     )
 
 
+# Per-doc ``array<struct<band_id, band_hash>>`` over ``shingles``, as ONE
+# parsed SQL expression: built from Column nodes, the same tree cost one
+# py4j round trip per node (~160 ms a call). A single ``aggregate`` does:
+# shingles → h0 array (one md5 each, the ``stable_token_hash`` math) → fold
+# to the NUM_PERM per-permutation minima → ``finish`` builds the band
+# structs from the already-computed accumulator. Separate per-permutation
+# ``transform``s would re-hash every shingle once per permutation (lambdas
+# can't share subexpressions across columns). Plain integer literals
+# coerce exactly as ``F.lit`` does (int below 2^31, bigint above).
+_BANDS_KERNEL = (
+    "aggregate("
+    "transform(shingles, s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)), "
+    f"array_repeat(CAST({MINHASH_P} AS BIGINT), {NUM_PERM}), "
+    f"(acc, h) -> zip_with(acc, sequence(1, {NUM_PERM}), (cur, i) -> least(cur, "
+    f"(element_at(array({', '.join(str(a) for a, _ in MINHASH_COEF)}), CAST(i AS INT)) * h "
+    f"+ element_at(array({', '.join(str(b) for _, b in MINHASH_COEF)}), CAST(i AS INT))) "
+    f"% {MINHASH_P})), "
+    f"sig -> transform(sequence(0, {NUM_BANDS - 1}), b -> struct(CAST(b AS INT) AS band_id, "
+    "md5(concat("
+    + ", '-', ".join(
+        f"CAST(element_at(sig, CAST(b * {BAND_ROWS} AS INT) + {r + 1}) AS STRING)"
+        for r in range(BAND_ROWS)
+    )
+    + ")) AS band_hash)))"
+)
+
+
 def lsh_bands_mapside(
     docs_arr: DataFrame, id_col: str, keep_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """(id, band_id, band_hash) computed in ONE map-side expression with the
-    token hash evaluated ONCE per shingle.
+    token hash evaluated ONCE per shingle (``_BANDS_KERNEL``).
 
-    ``minhash_signatures_mapside`` re-hashes every shingle per permutation
-    (16 md5s per shingle — the lambdas can't share subexpressions across
-    separate ``transform`` calls), which costs more CPU than the shuffle it
-    saves. Here a single ``aggregate`` does: shingles → h0 array (one md5
-    each) → fold to the 16 per-permutation minima → ``finish`` builds the
-    band structs from the already-computed accumulator. Same band hashes as
-    ``lsh_bands(minhash_signatures(...))`` (agreement-tested), zero shuffle,
-    one hash per shingle.
+    Same band hashes as ``lsh_bands(minhash_signatures(...))``
+    (agreement-tested), zero shuffle, one hash per shingle. Docs with no
+    shingles are excluded (they can't match anything).
     """
-    a_arr = F.array(*[F.lit(a) for a, _ in MINHASH_COEF])
-    b_arr = F.array(*[F.lit(b) for _, b in MINHASH_COEF])
-    idx1 = F.sequence(F.lit(1), F.lit(NUM_PERM))
-    p = F.lit(MINHASH_P)
-
-    def step(acc, h):
-        def upd(cur, i):
-            return F.least(
-                cur, (F.element_at(a_arr, i.cast("int")) * h + F.element_at(b_arr, i.cast("int"))) % p
-            )
-
-        return F.zip_with(acc, idx1, upd)
-
-    def finish(acc):
-        def band(b):
-            lo = (b * BAND_ROWS).cast("int")
-            parts = []
-            for r in range(BAND_ROWS):
-                if r:
-                    parts.append(F.lit("-"))
-                parts.append(F.element_at(acc, lo + F.lit(r + 1)).cast("string"))
-            return F.struct(
-                b.cast("int").alias("band_id"), F.md5(F.concat(*parts)).alias("band_hash")
-            )
-
-        return F.transform(F.sequence(F.lit(0), F.lit(NUM_BANDS - 1)), band)
-
-    bands = F.aggregate(
-        F.transform(F.col("shingles"), _h0_expr),
-        F.array_repeat(p.cast("long"), NUM_PERM),
-        step,
-        finish,
-    )
     extra = [F.col(c) for c in keep_cols]
     return (
         docs_arr.filter(F.col("n_shingles") > 0)
-        .select(F.col(id_col), *extra, F.explode(bands).alias("b"))
+        .select(F.col(id_col), *extra, F.explode(F.expr(_BANDS_KERNEL)).alias("b"))
         .select(id_col, *keep_cols, "b.band_id", "b.band_hash")
     )
-
-
-def simhash_fingerprints_mapside(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """SimHash with ZERO shuffle: per doc, each bit's signed sum is an
-    ``aggregate`` over the shingle array. Identical values to
-    ``simhash_fingerprints`` (same h0, same bit math), map-side only."""
-    arr = word_ngrams(F.col(text_col), n)
-    idx1 = F.sequence(F.lit(1), F.lit(SIMHASH_BITS))
-    pow2 = F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
-
-    # ONE aggregate with a 32-wide accumulator: each shingle is hashed once
-    # and its 32 signed bits folded in a single pass (32 separate per-bit
-    # aggregate columns would re-run word_ngrams + md5 per column — the
-    # shared-subexpression trap in CLAUDE.md). Bit j is tested with a
-    # literal power-of-two mask (shiftright's amount must be a python int,
-    # so it can't take the lambda's bit index).
-    def step(acc, h):
-        def upd(cur, j):
-            mask = F.element_at(pow2, j.cast("int"))
-            return cur + F.when(h.bitwiseAND(mask) != 0, F.lit(1)).otherwise(F.lit(-1))
-
-        return F.zip_with(acc, idx1, upd)
-
-    def finish(acc):
-        def add_bit(fp, j):
-            return fp + F.when(
-                F.element_at(acc, j.cast("int")) > 0,
-                F.element_at(pow2, j.cast("int")),
-            ).otherwise(F.lit(0).cast("long"))
-
-        return F.aggregate(idx1, F.lit(0).cast("long"), add_bit)
-
-    sums = df.select(
-        F.col(id_col),
-        F.size(arr).alias("n_sh"),
-        F.aggregate(
-            F.transform(arr, _h0_expr),
-            F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-            step,
-            finish,
-        ).alias("simhash"),
-    )
-    return sums.filter(F.col("n_sh") > 0).select(F.col(id_col), "simhash")
 
 
 def shingles_shared(df: DataFrame, id_col: str, text_col: str, n: int = 3):

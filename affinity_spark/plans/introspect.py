@@ -80,9 +80,10 @@ def normalize_plan(text: str) -> str:
     lambda-variable suffix the JVM draws from one global counter
     (``x_54``, ``acc_3``), exchange ``plan_id``s, RDD ids
     (``MapPartitionsRDD[4957]``, drawn from a per-process counter that
-    every earlier job moves), the scratch paths a
-    run creates (``mkdtemp`` roots such as ``affinity_ivf_k3xtd_08`` and
-    KeyedTable version dirs ``v<millis>-<hex8>``), and the final plans of
+    every earlier job moves), the scratch paths a run creates (``mkdtemp``
+    roots such as ``affinity_ivf_k3xtd_08``, KeyedTable version dirs
+    ``v<millis>-<hex8>`` and the uuid names of their delta files
+    ``_deltas/<seq>/<hex32>.parquet``), and the final plans of
     executed adaptive plans (``_drop_final_plans``). Other node ids
     (``(12)``) are left alone — they are positional, and
     ``tools/plan_audit.py`` counts them."""
@@ -92,6 +93,7 @@ def normalize_plan(text: str) -> str:
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
     text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
     text = re.sub(r"\b(affinity_[a-z]+_)[a-z0-9_]{8}(?=/)", r"\1X", text)
+    text = re.sub(r"(/_deltas/\d+/)[0-9a-f]{32}(?=\.parquet)", r"\1X", text)
     return re.sub(r"\bv\d{16}-[0-9a-f]{8}\b", "vN", text)
 
 

@@ -1085,7 +1085,7 @@ def docs_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     lab = train_split(docs, "doc_id")
     gr = lab.select(
-        "split", "doc_id", F.explode(word_ngrams(F.col("text"), 4)).alias("gram")
+        "split", "doc_id", F.explode(word_ngrams("text", 4)).alias("gram")
     )
     train_g = gr.filter(F.col("split") == "train").select("gram").distinct()
     evg = gr.filter(F.col("split") != "train")

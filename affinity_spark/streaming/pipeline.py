@@ -61,7 +61,11 @@ from pyspark.sql.types import (
 
 from affinity_spark.functions.lits import local_df
 from affinity_spark.functions.text import doc_fingerprint, token_count
-from affinity_spark.operators.dedup import lsh_bands_mapside, word_ngrams
+from affinity_spark.operators.dedup import (
+    lsh_bands_mapside,
+    lsh_candidate_pairs,
+    word_ngrams,
+)
 
 _VERDICT_SCHEMA = StructType(
     [
@@ -123,7 +127,7 @@ def streaming_corpus_verdicts(
     )
     # doc_shingle_arrays drops payload columns; derive inline keeping
     # n_tokens so the verdict rows carry it to the sink
-    arr = word_ngrams(F.col(text_col), n)
+    arr = word_ngrams(text_col, n)
     arrs = exact.select(
         F.col(id_col),
         arr.alias("shingles"),
@@ -240,8 +244,9 @@ def indexed_corpus_sink(
     1. already-admitted ids are dropped (left_anti vs the corpus store) —
        the replay-idempotence twin of the in-state ``did in ids`` skip;
     2. candidates = maintained-index probe (prior corpus, batch bands
-       broadcast, index never shuffled) ∪ within-batch band self-join
-       (earlier id wins, the in-batch arrival-order contract);
+       broadcast, index never shuffled) ∪ within-batch shared-bucket
+       pairs (``lsh_candidate_pairs``; earlier id wins, the in-batch
+       arrival-order contract);
     3. exact integer Jaccard >= t_num/t_den verifies candidates against
        the corpus store's shingle arrays (word_ngrams arrays are
        distinct, so array Jaccard == the stream state's set Jaccard);
@@ -255,7 +260,7 @@ def indexed_corpus_sink(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        arr0 = word_ngrams(F.col(text_col), n)
+        arr0 = word_ngrams(text_col, n)
         arr = batch_df.select(
             F.col(id_col),
             arr0.alias("shingles"),
@@ -276,21 +281,8 @@ def indexed_corpus_sink(
             arr.unpersist()
             return
 
-        nb = lsh_bands_mapside(arr, id_col)
-        intra = (
-            F.broadcast(
-                nb.select(
-                    F.col(id_col).alias("new_id"), "band_id", "band_hash"
-                )
-            )
-            .join(
-                nb.select(
-                    F.col(id_col).alias("dup_of"), "band_id", "band_hash"
-                ),
-                ["band_id", "band_hash"],
-            )
-            .filter(F.col("dup_of") < F.col("new_id"))
-            .select("new_id", "dup_of")
+        intra = lsh_candidate_pairs(lsh_bands_mapside(arr, id_col), id_col).select(
+            F.col("id_b").alias("new_id"), F.col("id_a").alias("dup_of")
         )
         cand = intra
         have_corpus = band_index.exists() and corpus_store.exists()

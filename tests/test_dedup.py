@@ -411,3 +411,121 @@ def test_incremental_lsh_pairs_matches_restricted_full_join(spark):
     assert got == want and len(got) >= 2
     ids = {(r[0], r[1]) for r in got}
     assert all(n >= 10 and e < 10 for n, e in ids)
+
+
+# --- band kernel and bucket grouping, against python models ----------------
+
+_EDGE_TEXTS = [
+    None,
+    "",
+    " ",
+    "\n",
+    "a b",
+    "\tleading tab words here ok",
+    "\nnewline led text with several words",
+    "Trailing tab\t",
+    "x\ty\nz w  spaced   out",
+    " ".join(f"w{i % 997}" for i in range(40_000)),  # ~200 KB
+]
+
+
+def _py_word_ngrams(text, n=3):
+    """Spark's ``trim`` strips spaces only and Java's ``\\s`` is
+    [ \\t\\n\\x0B\\f\\r], so tab/newline-led texts keep a leading empty token."""
+    import re
+
+    if text is None:
+        return []
+    tokens = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" ").lower())
+    grams = [" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)]
+    return list(dict.fromkeys(grams))
+
+
+def _py_h0(s: str) -> int:
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
+def _py_bands(shingles):
+    import hashlib
+
+    h = [_py_h0(s) for s in shingles]
+    sig = [min((a * x + b) % dd.MINHASH_P for x in h) for a, b in dd.MINHASH_COEF]
+    return {
+        (
+            band,
+            hashlib.md5(
+                "-".join(str(sig[band * dd.BAND_ROWS + r]) for r in range(dd.BAND_ROWS)).encode()
+            ).hexdigest(),
+        )
+        for band in range(dd.NUM_BANDS)
+    }
+
+
+def test_word_ngrams_and_bands_on_edge_texts(spark):
+    """NULL, empty, whitespace-only, tab/newline-led and ~200 KB texts:
+    the parsed-SQL kernels give the python model's grams and bands."""
+    docs = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)), "doc_id long, text string")
+    got = dict(docs.select("doc_id", dd.word_ngrams("text", 3).alias("g")).collect())
+    want = {i: _py_word_ngrams(t) for i, t in enumerate(_EDGE_TEXTS)}
+    assert got == want
+    assert want[5][0] == " leading tab" and want[7] == ["trailing tab "]
+    assert len(want[9]) == 997
+
+    bands = dd.lsh_bands_mapside(dd.doc_shingle_arrays(docs, "doc_id", "text", 3), "doc_id")
+    got_bands = {}
+    for r in bands.collect():
+        got_bands.setdefault(r.doc_id, set()).add((r.band_id, r.band_hash))
+    assert got_bands == {i: _py_bands(g) for i, g in want.items() if g}
+
+
+def _hot_bucket_bands(spark, n_hot=200):
+    rows = [(i, "the same exact duplicated document body repeated verbatim") for i in range(n_hot)]
+    rows += [
+        (i, f"unique document number {i % 40} with its own words {i % 7} and {i % 11}")
+        for i in range(n_hot, n_hot + 300)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return dd.lsh_bands_mapside(dd.doc_shingle_arrays(docs, "doc_id", "text", 3), "doc_id")
+
+
+def _self_join_pairs(bands):
+    """The bucket self-join the grouping replaced."""
+    keys = ["band_id", "band_hash"]
+    a = bands.select(F.col("doc_id").alias("id_a"), *keys)
+    b = bands.select(F.col("doc_id").alias("id_b"), *keys)
+    return {
+        tuple(r)
+        for r in a.join(b, keys).filter("id_a < id_b").select("id_a", "id_b").distinct().collect()
+    }
+
+
+def test_lsh_candidate_pairs_hot_bucket_matches_self_join(spark):
+    """~200 identical docs fill one bucket in every band: the grouping
+    enumerates the same pair set as the bucket self-join."""
+    bands = _hot_bucket_bands(spark)
+    got = {tuple(r) for r in dd.lsh_candidate_pairs(bands, "doc_id").collect()}
+    assert got == _self_join_pairs(bands)
+    assert {(a, b) for a in range(200) for b in range(a + 1, 200)} <= got
+
+
+def test_lsh_candidate_pairs_capped_matches_subbucket_model(spark):
+    """With ``bucket_cap`` each bucket of n members splits into
+    ceil(n/cap) sub-buckets by ``stable_token_hash(id) mod ceil(n/cap)``;
+    the candidates are the pairs within one sub-bucket."""
+    cap = 16
+    bands = _hot_bucket_bands(spark)
+    buckets = {}
+    for r in bands.collect():
+        buckets.setdefault((r.band_id, r.band_hash), []).append(r.doc_id)
+    want = set()
+    for ids in buckets.values():
+        k = -(-len(ids) // cap)
+        subs = {}
+        for i in ids:
+            subs.setdefault(_py_h0(str(i)) % k, []).append(i)
+        want |= {(a, b) for m in subs.values() for a in m for b in m if a < b}
+    got = {tuple(r) for r in dd.lsh_candidate_pairs(bands, "doc_id", bucket_cap=cap).collect()}
+    assert got == want
+    assert len(got) < len(_self_join_pairs(bands))

@@ -147,6 +147,20 @@ def test_minhash_lsh_signatures_mapside(spark):
             raise AssertionError(f"shingle-keyed join in LSH dedup: {line}")
 
 
+def test_lsh_band_kernel_evaluated_once(spark):
+    """The LSH consumers evaluate the band kernel once: candidates come
+    from one grouping by bucket. A bucket self-join evaluated it on both
+    sides, since a broadcast build side is never reused."""
+    import re
+
+    from affinity_spark.plans.introspect import executed_plan
+
+    for df in (e.dedup_minhash_lsh(spark, SF), e.pipeline_clean_corpus(spark, SF)):
+        plan = executed_plan(df)
+        kernels = re.findall(r"Generate explode\(aggregate\(transform\(shingles#", plan)
+        assert len(kernels) == 1, plan
+
+
 def test_q17_correlated_avg_single_window_shuffle(spark):
     """Q17's correlated scalar subquery folds to ONE window shuffle on
     l_partkey (plus the single-partition final agg) — a naive plan joins

@@ -85,6 +85,25 @@ def test_normalize_plan_masks_per_process_counters():
     assert normalize_plan(_PLAN.replace("assigned", "codes")) != norm
 
 
+def test_normalize_plan_masks_keyed_table_delta_file_names():
+    """A KeyedTable delta file is named by a random uuid, so the same
+    served plan read in two processes names other files."""
+    from affinity_spark.plans.introspect import normalize_plan
+
+    scan = (
+        "Location: InMemoryFileIndex(2 paths)[file:/tmp/affinity_store_k3xtd_08/"
+        "docs/v0001792311844050-02d3ffee/part-0.parquet, "
+        "file:/tmp/affinity_store_k3xtd_08/docs/v0001792311844050-02d3ffee/"
+        "_deltas/000001/{}.parquet]"
+    )
+    a = scan.format("9f1c2b7e4d5a40c18e2f6a0b3c4d5e6f")
+    b = scan.format("0123456789abcdef0123456789abcdef")
+    assert normalize_plan(a) == normalize_plan(b)
+    assert "/_deltas/000001/X.parquet" in normalize_plan(a)
+    # the delta sequence number is a real difference: one more upsert
+    assert normalize_plan(a) != normalize_plan(a.replace("000001", "000002"))
+
+
 def _executed(final: list[str], initial: list[str]) -> str:
     """A formatted plan of an executed adaptive plan: ``final`` and
     ``initial`` are (indent, name) tree rows, numbered as Spark does
